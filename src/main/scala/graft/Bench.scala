@@ -6,14 +6,20 @@ import org.apache.spark.sql.SparkSession
   * one JSON line on stdout (driver contract — do not change format).
   *
   * A warm-up pass runs every query once at sf0.001 first so the timed
-  * loop measures the engine, not first-call Janino/JIT compilation of
-  * generated code (each distinct query pays codegen exactly once per
-  * JVM; without warm-up that cost lands on whichever query runs
-  * first and dwarfs its real runtime).
+  * loop measures the engine, not first-call class loading and JIT of
+  * Spark's own code (without warm-up that cost lands on whichever
+  * query runs first and dwarfs its real runtime). The warm-up does NOT
+  * keep each query's generated classes: Spark's compiled-code cache is
+  * an LRU of `spark.sql.codegen.cache.maxEntries` keys (1000 under
+  * GraftSession.tune, 100 by default), and the other ~500 queries'
+  * warm-up classes pass through it before a query's timed runs, so its
+  * first timed run Janino-compiles its code again.
   *
   * Each query is then timed TWICE at the target SF and the faster run
-  * reported (steady-state wall-clock). The first sf-sized pass still
-  * pays one-off, non-engine costs the tiny warm-up can't absorb — OS
+  * reported (steady-state wall-clock). The second run finds the first
+  * one's classes cached as long as one query's working set fits in the
+  * cache. The first sf-sized pass also pays one-off, non-engine costs
+  * the tiny warm-up can't absorb — OS
   * page-cache population of the sf parquet files, JIT re-profiling at
   * real data volumes, AQE runtime re-plans at real sizes — which r1
   * showed can inflate a single query by ~10× on a cold machine. */

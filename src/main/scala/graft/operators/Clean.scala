@@ -11,10 +11,19 @@ import graft.functions.iso_duration_to_seconds
   */
 object Clean {
 
-  /** Null-safe trim + drop-empty filter on a text column
+  /** Exactly the characters Python's `str.isspace()` accepts, i.e.
+    * what the reference's argument-less `str.strip()` removes
+    * (silver_clean_comments.py:45-47). Spark's
+    * one-argument `trim` strips U+0020 only. */
+  private[operators] val pyWhitespace: String =
+    (Seq(0x09, 0x0a, 0x0b, 0x0c, 0x0d, 0x1c, 0x1d, 0x1e, 0x1f, 0x20, 0x85,
+      0xa0, 0x1680) ++ (0x2000 to 0x200a) ++
+      Seq(0x2028, 0x2029, 0x202f, 0x205f, 0x3000)).map(_.toChar).mkString
+
+  /** Null-safe Python-`strip()` + drop-empty filter on a text column
     * (/root/reference/silver_clean_comments.py:45-47). */
   def trimNonEmpty(df: DataFrame, textCol: String): DataFrame =
-    df.withColumn(textCol, trim(col(textCol)))
+    df.withColumn(textCol, trim(col(textCol), pyWhitespace))
       .filter(col(textCol).isNotNull && col(textCol) =!= "")
 
   /** Drop records carrying an error marker

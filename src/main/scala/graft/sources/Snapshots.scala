@@ -1,7 +1,8 @@
 package graft.sources
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 
 /** Manifest-based SNAPSHOT layer over plain parquet — the minimal
   * time-travel/rollback half of a 100 TB lakehouse, the public
@@ -95,46 +96,64 @@ object Snapshots {
   }
 
   /** Write `df`'s files into `data/` under version-prefixed names and
-    * return them; the staging dir (and its _SUCCESS noise) is
-    * removed. Files become VISIBLE only when the manifest commits. */
-  private def stage(df: DataFrame, root: String, v: Int): Seq[String] = {
+    * return them, or None when `df` has no rows. The row count rides
+    * on the staging write itself (`observe`), so the plan runs once —
+    * a separate emptiness probe would re-run it, and re-send every
+    * row it reads to an enrichment endpoint upstream. An empty
+    * result moves no part file; the staging dir (and its _SUCCESS
+    * noise) is removed either way. Files become VISIBLE only when the
+    * manifest commits. */
+  private def stage(df: DataFrame, root: String, v: Int): Option[Seq[String]] = {
     val fs = fsOf(df.sparkSession, root)
-    fs.mkdirs(new Path(root, DataDir))
     val staging = new Path(root, f".staging-v$v%05d")
-    df.write.mode("overwrite").parquet(staging.toString)
-    val parts = fs.listStatus(staging).toSeq
-      .filter(s => s.isFile && s.getPath.getName.startsWith("part-"))
-      .sortBy(_.getPath.getName)
-    val names = parts.zipWithIndex.map { case (s, i) =>
-      val name = f"v$v%05d-$i%05d.parquet"
-      val dest = new Path(root, s"$DataDir/$name")
-      if (!fs.rename(s.getPath, dest))
-        throw new IllegalStateException(s"could not move ${s.getPath} to $dest")
-      name
+    val obs = Observation()
+    df.observe(obs, count(lit(1)).as("n"))
+      .write.mode("overwrite").parquet(staging.toString)
+    val names = if (obs.get("n").asInstanceOf[Long] == 0L) None else {
+      fs.mkdirs(new Path(root, DataDir))
+      val parts = fs.listStatus(staging).toSeq
+        .filter(s => s.isFile && s.getPath.getName.startsWith("part-"))
+        .sortBy(_.getPath.getName)
+      Some(parts.zipWithIndex.map { case (s, i) =>
+        val name = f"v$v%05d-$i%05d.parquet"
+        val dest = new Path(root, s"$DataDir/$name")
+        if (!fs.rename(s.getPath, dest))
+          throw new IllegalStateException(s"could not move ${s.getPath} to $dest")
+        name
+      })
     }
     fs.delete(staging, true)
     names
   }
 
-  /** Commit a new snapshot whose content is exactly `df` (overwrite)
-    * or the previous snapshot plus `df` (append). Returns the new
-    * version. Empty dataframes are rejected: parquet needs at least
-    * one file to carry the schema, and a snapshot that cannot be
-    * read back is a trap, not a table state. */
-  def commit(df: DataFrame, root: String,
-      overwrite: Boolean = false): Int = {
-    require(!df.isEmpty, "refusing to commit an empty snapshot")
-    val spark = df.sparkSession
-    val fs = fsOf(spark, root)
+  /** Stage `df` as the next version and publish its manifest; None
+    * (nothing published) when `df` has no rows. */
+  private def publish(df: DataFrame, root: String, overwrite: Boolean,
+      batchId: Option[Long]): Option[Int] = {
+    val fs = fsOf(df.sparkSession, root)
     val prev = versions(fs, root)
     val next = if (prev.isEmpty) 1 else prev.max + 1
-    val fresh = stage(df, root, next)
-    val files =
-      if (overwrite || prev.isEmpty) fresh
-      else readManifest(fs, root, prev.max)._2 ++ fresh
-    writeManifest(fs, root, next,
-      if (overwrite || prev.isEmpty) "overwrite" else "append", files)
-    next
+    stage(df, root, next).map { fresh =>
+      val files =
+        if (overwrite || prev.isEmpty) fresh
+        else readManifest(fs, root, prev.max)._2 ++ fresh
+      writeManifest(fs, root, next,
+        if (overwrite || prev.isEmpty) "overwrite" else "append", files, batchId)
+      next
+    }
+  }
+
+  /** Commit a new snapshot whose content is exactly `df` (overwrite)
+    * or the previous snapshot plus `df` (append). Returns the new
+    * version. Empty dataframes are rejected (after their staging
+    * write, which counts the rows; nothing is published): parquet
+    * needs at least one file to carry the schema, and a snapshot that
+    * cannot be read back is a trap, not a table state. */
+  def commit(df: DataFrame, root: String,
+      overwrite: Boolean = false): Int = {
+    val v = publish(df, root, overwrite, None)
+    require(v.nonEmpty, "refusing to commit an empty snapshot")
+    v.get
   }
 
   /** [[commit]] for Structured Streaming `foreachBatch` — the
@@ -149,24 +168,11 @@ object Snapshots {
     *    Snapshots.commitBatch(df, root, id): Unit)`. */
   def commitBatch(df: DataFrame, root: String, batchId: Long,
       overwrite: Boolean = false): Option[Int] = {
-    val spark = df.sparkSession
-    val fs = fsOf(spark, root)
+    val fs = fsOf(df.sparkSession, root)
     val already = versions(fs, root).exists { v =>
       batchIdOf(fs, root, v).contains(batchId)
     }
-    if (already || df.isEmpty) None
-    else {
-      val prev = versions(fs, root)
-      val next = if (prev.isEmpty) 1 else prev.max + 1
-      val fresh = stage(df, root, next)
-      val files =
-        if (overwrite || prev.isEmpty) fresh
-        else readManifest(fs, root, prev.max)._2 ++ fresh
-      writeManifest(fs, root, next,
-        if (overwrite || prev.isEmpty) "overwrite" else "append", files,
-        Some(batchId))
-      Some(next)
-    }
+    if (already) None else publish(df, root, overwrite, Some(batchId))
   }
 
   private def batchIdOf(fs: FileSystem, root: String,

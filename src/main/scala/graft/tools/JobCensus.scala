@@ -1,12 +1,16 @@
 package graft.tools
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
 
 /** Per-query job census (dev tool, not part of the driver contract):
   * warm each named query at sf0.001, then run it once at the target
   * SF with a listener recording every job's wall clock and the total
   * executor task time — the "is this query job-count-bound or
-  * compute-bound" question the optimization rounds keep asking.
+  * compute-bound" question the optimization rounds keep asking — and
+  * the Janino compilations the measured run paid (generated code that
+  * missed Spark's compiled-code cache after the warm-up: a per-call
+  * code variant, or a cache too small for the working set).
   * Usage: `runMain graft.tools.JobCensus <sfDir> <queryName>...` */
 object JobCensus {
   def main(args: Array[String]): Unit = {
@@ -49,13 +53,16 @@ object JobCensus {
           }
       }
       spark.sparkContext.addSparkListener(l)
+      val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       val t0 = System.nanoTime()
       fn(spark, dir).count()
       val wall = (System.nanoTime() - t0) / 1e9
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
       Thread.sleep(500) // listener bus drain
       spark.sparkContext.removeSparkListener(l)
       println(f"[census] $n%s wall=$wall%.2f s jobs=${jobs.size}%d " +
-        f"tasks=${nTasks.get}%d taskTime=${taskTime.get / 1000.0}%.1f s")
+        f"tasks=${nTasks.get}%d compiles=$compiles%d " +
+        f"taskTime=${taskTime.get / 1000.0}%.1f s")
       jobs.sortBy(-_._2).take(20).foreach { case (id, ms, d) =>
         println(f"[census]   job#$id%-4d $ms%6d ms  $d%s")
       }

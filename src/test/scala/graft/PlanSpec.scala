@@ -1304,4 +1304,36 @@ class PlanSpec extends AnyFunSuite with SparkTestBase {
     assert(total.get <= 9,
       s"pageRankInt(3 iters) exchange census grew: ${total.get}")
   }
+
+  test("codegen reuse: a repeated q208 call and a same-shaped commit compile no class anew") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import org.apache.spark.sql.functions._
+    // Janino compilations are counted JVM-wide; a warm repeat that
+    // compiles anything missed Spark's compiled-code cache, either on a
+    // per-call code variant or on an LRU too small for the working set.
+    // q208 then q155 (the iterative-kernels pair) take ~106 cache keys
+    // at sf0.001: under Spark's 100-entry default, q155 evicted q208's
+    // oldest classes and the next q208 call compiled 24 of them again.
+    def compiles(f: => Unit): Long = {
+      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      f
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+    }
+    def run(q: String): Unit = SparkEntry.queries(q)(spark, sf).collect(): Unit
+    run("q208_bfs_levels")
+    run("q155_logistic_train")
+    assert(compiles(run("q208_bfs_levels")) == 0,
+      "warm q208 call recompiled generated code")
+    // a commit's emptiness check must not plan a LIMIT: Spark names
+    // each LocalLimitExec's counter from a JVM-global sequence
+    // (_limit_counter_N), so every such plan is new code — and a union
+    // (the per-day frames the medallion commits) puts one under each arm
+    def commit(): Unit = {
+      val root = java.nio.file.Files.createTempDirectory("graft_cg_").toString
+      sources.Snapshots.commit(spark.range(0, 20).union(spark.range(20, 40))
+        .toDF("id").withColumn("k", col("id") % 7), root): Unit
+    }
+    commit()
+    assert(compiles(commit()) == 0, "warm Snapshots.commit recompiled generated code")
+  }
 }

@@ -14,10 +14,14 @@ import graft.model.SentimentResult
   * local[*]) still increments the shared counters. */
 object FakeEndpoint {
   val calls = new AtomicInteger(0)
+  /** Every text of every request, in arrival order. */
+  val texts = new java.util.concurrent.ConcurrentLinkedQueue[String]()
   @volatile var failFirst: Int = 0
   @volatile var responseFor: Seq[String] => String = wellFormed
 
-  def reset(): Unit = { calls.set(0); failFirst = 0; responseFor = wellFormed }
+  def reset(): Unit = {
+    calls.set(0); texts.clear(); failFirst = 0; responseFor = wellFormed
+  }
 
   def wellFormed(texts: Seq[String]): String = {
     val results = texts.map {
@@ -40,6 +44,7 @@ class FakeTransport extends HttpTransport {
       .readTree(body).path("texts")
     val seq = (0 until texts.size).map(i =>
       if (texts.get(i).isNull) null else texts.get(i).asText)
+    seq.foreach(t => FakeEndpoint.texts.add(t))
     FakeEndpoint.responseFor(seq)
   }
 }

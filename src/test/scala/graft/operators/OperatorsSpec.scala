@@ -3051,6 +3051,17 @@ class CleanSpec extends AnyFunSuite with SparkTestBase {
     assert(got == Seq("keep me"))
   }
 
+  test("trimNonEmpty strips what Python's str.strip() strips, not just U+0020") {
+    val df = Seq("\t\n", "\r\n  \r\n", "\u3000", " x\t").toDF("text")
+    assert(Clean.trimNonEmpty(df, "text").as[String].collect().toSeq == Seq("x"))
+    // every str.isspace() character goes; U+200B (not isspace) stays
+    val all = Clean.pyWhitespace
+    assert(all.length == 29)
+    val edge = Seq(all + "a b" + all, all, "\u200bz\u200b").toDF("text")
+    assert(Clean.trimNonEmpty(edge, "text").as[String].collect().toSeq ==
+      Seq("a b", "\u200bz\u200b"))
+  }
+
   test("silverizeVideos: nested projection, safe casts, duration parse, unicode") {
     val bronze = spark.read.json(Seq(
       """{"id":"v1","snippet":{"title":"Тест 🎧 episode","publishedAt":"2026-01-20T10:00:00Z","channelTitle":"chan"},

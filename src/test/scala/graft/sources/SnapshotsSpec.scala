@@ -63,9 +63,30 @@ class SnapshotsSpec extends SparkTestBase {
     val deleted = Snapshots.vacuum(spark, path, keepLast = 1)
     assert(deleted == Seq("v99999-00000.parquet"))
     assert(rows(path) == Set(0L, 1L, 2L))
-    intercept[IllegalArgumentException] {
+    val e = intercept[IllegalArgumentException] {
       Snapshots.commit(spark.range(0, 0).toDF(), path)
     }
+    assert(e.getMessage.contains("refusing to commit an empty snapshot"))
+    // the refused commit publishes nothing and leaves no staging dir
+    assert(Snapshots.latestVersion(spark, path).contains(1))
+    assert(!fs.listStatus(new org.apache.hadoop.fs.Path(path))
+      .exists(_.getPath.getName.startsWith(".staging")))
+    assert(Snapshots.vacuum(spark, path, keepLast = 1).isEmpty,
+      "no part file of the empty commit may reach data/")
+  }
+
+  test("a commit runs its plan once: each enriched text reaches the endpoint once") {
+    import graft.operators.{Enrich, FakeEndpoint, FakeTransport, HttpEnricher}
+    FakeEndpoint.reset()
+    val texts = (1 to 100).map(i => s"text $i")
+    val df = texts.toDF("text").repartition(3)
+    val enricher = new HttpEnricher("http://fake.local/enrich", new FakeTransport())
+    val path = tmp()
+    assert(Snapshots.commit(Enrich.enrichSentiment(df, "text", enricher,
+      batchSize = 8), path) == 1)
+    import scala.jdk.CollectionConverters._
+    assert(FakeEndpoint.texts.asScala.toSeq.sorted == texts.sorted)
+    assert(Snapshots.readSnapshot(spark, path).count() == 100L)
   }
 
   test("commitBatch: foreachBatch replays are exactly-once; empty batches skip") {
