@@ -113,7 +113,7 @@ object Graph {
     * the statistics would have picked; above it the stats-less
     * sort-merge posture stands unchanged (guide §3.1 — hint exactly
     * when the engine, not the planner, knows a side is small). */
-  private[operators] def hintSmall(df: DataFrame, rows: Long): DataFrame = {
+  private def hintSmall(df: DataFrame, rows: Long): DataFrame = {
     val cap = df.sparkSession.conf
       .getOption("spark.graft.broadcastState.maxRows")
       .map(_.toLong).getOrElse(1000000L)
@@ -133,7 +133,7 @@ object Graph {
     * broadcast-joined) exchanges could ever save — the partitioning
     * derives from measured input size, never from a constant tuned
     * for either local mode or the cluster. */
-  private[operators] def persistForKey(df: DataFrame, key: String): (DataFrame, Long) = {
+  private def persistForKey(df: DataFrame, key: String): (DataFrame, Long) = {
     val minRows = df.sparkSession.conf.getOption("spark.graft.keyedCache.minRows")
       .map(_.toLong).getOrElse(200000L)
     val base = df.persist()

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.functions.tokens
 
@@ -22,15 +23,14 @@ import graft.functions.tokens
   * standard straight-through surrogate and costs nothing at this
   * precision.
   *
-  * Scale shape per iteration (batch gradient descent):
-  *   score: features ⋈ weights (weights is `dim` rows — model-sized,
-  *   AQE broadcasts it) + one per-example hash aggregate;
-  *   gradient: features ⋈ errors + one per-feature hash aggregate;
-  *   update: weights ⋈ gradient (both model-sized).
-  * Two corpus-sized shuffles per iteration, no driver-side data
-  * motion (the example count is the single scalar collected, once).
-  * The feature table is persisted across iterations; weights are
-  * checkpointed so the plan stays bounded at large iteration counts.
+  * Scale shape (batch gradient descent, the MLlib shape): one pass
+  * builds one row per labeled example — its label and the set of its
+  * in-range feature ids — and persists it. Each iteration then
+  * broadcasts the dense `dim`-long weight array and runs ONE job, a
+  * `treeAggregate` of the `dim`-long gradient over the persisted
+  * examples: no join, no corpus-sized shuffle, no checkpoint. The
+  * update happens on the driver. The model is driver-held, so `dim`
+  * is bounded (2^24 buckets, 128 MiB of weights).
   */
 object Learn {
 
@@ -66,83 +66,86 @@ object Learn {
   private def hardSigmoidMilli(s: Column): Column =
     greatest(lit(0L), least(lit(1000L), lit(500L) + sdiv(s, lit(4L))))
 
+  /** [[sdiv]] on driver/executor longs: Java's `/` truncates, which on
+    * a nonnegative dividend is the floor both engines take. */
+  private def sdivLong(a: Long, b: Long): Long =
+    if (a >= 0) a / b else -((-a) / b)
+
   /** Batch-gradient-descent training of a binary logistic classifier
     * over presence features, all arithmetic BIGINT milli-units.
     *
     * `features`: (ex_id, feature_id) — [[hashedFeatures]] output.
-    * `labels`:   (ex_id, y) with y ∈ {0, 1}; unlabeled examples are
-    *             ignored, labeled examples with no features
-    *             contribute no gradient (their error reaches no
-    *             feature).
+    *             Duplicate rows count once; null and out-of-range
+    *             (outside [0, dim)) feature ids are ignored.
+    * `labels`:   (ex_id, y) with y ∈ {0, 1}. Unlabeled examples,
+    *             null-`y` rows and labeled examples with no in-range
+    *             feature contribute no gradient (their error reaches
+    *             no weight); a duplicated label row trains twice.
     *
     * Per iteration, with p̃ᵢ = hard-sigmoid(Σ_{f∈xᵢ} w_f) and
     * errᵢ = p̃ᵢ − 1000·yᵢ:
     *   w_f ← w_f − sign(g_f) · (|g_f| · lrNum) div (N · lrDen)
-    * where g_f = Σ_{i: f∈xᵢ} errᵢ and N = |labels| — plain averaged
-    * gradient descent with learning rate lrNum/lrDen, every division
-    * through the sign-split form. Returns the dense model:
-    * (feature_id, weight) for all `dim` buckets. */
+    * where g_f = Σ_{i: f∈xᵢ} errᵢ and N = |labels| (every label row,
+    * null `y` included) — plain averaged gradient descent with
+    * learning rate lrNum/lrDen, every division through the sign-split
+    * form.
+    *
+    * Shape: the examples table (one `groupBy(ex_id)` to the in-range
+    * feature sets, inner-joined to the labels) is built and persisted
+    * once, and N is counted once. Each iteration broadcasts the weight
+    * array and tree-aggregates the gradient array: one job, with no
+    * shuffle at five example partitions or fewer (past that
+    * `treeAggregate` adds one combine level that moves `dim`-long
+    * partial sums, never rows).
+    * The model lives on the driver, so `dim` ≤ 2^24.
+    *
+    * Returns the dense model: (feature_id, weight), both non-null
+    * BIGINT, for all `dim` buckets, read from a broadcast of the final
+    * weights. */
   def logisticTrainInt(features: DataFrame, labels: DataFrame, dim: Int,
       iterations: Int, lrNum: Long = 1L, lrDen: Long = 4L): DataFrame = {
     require(dim > 0, s"dim must be positive, got $dim")
+    require(dim <= (1 << 24), s"dim must be at most ${1 << 24}: the " +
+      s"weights are a driver-side array broadcast every iteration, got $dim")
     require(iterations >= 1 && iterations <= 10000,
       s"iterations must be in [1,10000], got $iterations")
     require(lrNum > 0 && lrDen > 0, "learning rate must be positive")
     val spark = features.sparkSession
-    // presence semantics are part of the contract — enforce them here
-    // (a duplicated (ex, feature) row would silently double that
-    // feature's weight in the score); the distinct costs one exchange
-    // on a table that is persisted across all iterations anyway.
-    // r18: both training tables go through the keyed-cache layout
-    // (persistForKey, hash(ex_id) above the size threshold) and the
-    // dim-BOUNDED weights/gradient frames ride broadcast hints
-    // (hintSmall — checkpointed weight chains carry no stats, so the
-    // planner otherwise plans SortMergeJoin and re-sorts the cached
-    // feature table every iteration). Per-iteration row-scale
-    // exchanges: score agg + error join + gradient join + feature agg
-    // → at scale, ONE (the feature-grain gradient aggregate): the
-    // score aggregate and both ex_id joins reuse the keyed layout.
-    val (f, _) = Graph.persistForKey(
-      features.select(col("ex_id"), col("feature_id")).distinct(), "ex_id")
-    val (l, n) = Graph.persistForKey(
-      labels.select(col("ex_id"), col("y").cast("long").as("__y")), "ex_id")
+    val l = labels.select(col("ex_id"), col("y").cast("long").as("__y"))
+    val n = l.count()
     require(n > 0, "labels is empty")
-    var weights = spark.range(dim)
-      .select(col("id").as("feature_id"), lit(0L).as("weight"))
-    var lastCkpt: DataFrame = null
-    var sinceCkpt = 0
+    val examples = features
+      .filter(col("feature_id") >= 0 && col("feature_id") < dim)
+      .groupBy(col("ex_id"))
+      .agg(collect_set(col("feature_id").cast("int")).as("__f"))
+      .join(l.filter(col("__y").isNotNull), Seq("ex_id"))
+      .select(col("__y"), col("__f"))
+      .rdd.map(r => (r.getLong(0), r.getSeq[Int](1).toArray))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val den = n * lrDen
+    var w = new Array[Long](dim)
     for (_ <- 1 to iterations) {
-      val scores = f.join(Graph.hintSmall(weights, dim), Seq("feature_id"))
-        .groupBy(col("ex_id")).agg(sum(col("weight")).as("__s"))
-      val errs = scores.join(l, Seq("ex_id"))
-        .select(col("ex_id"),
-          (hardSigmoidMilli(col("__s")) - lit(1000L) * col("__y")).as("__e"))
-      val grad = f.join(errs, Seq("ex_id"))
-        .groupBy(col("feature_id")).agg(sum(col("__e")).as("__g"))
-      weights = weights.join(Graph.hintSmall(grad, dim),
-          Seq("feature_id"), "left")
-        .select(col("feature_id"),
-          (col("weight") - coalesce(
-            sdiv(col("__g") * lrNum, lit(n * lrDen)), lit(0L))).as("weight"))
-      // every iteration, not every 3 (r18): the weight table is
-      // dim-BOUNDED so the checkpoint is trivial, and the broadcast
-      // hint above would otherwise re-execute the un-truncated chain
-      // of every preceding iteration once per broadcast build
-      sinceCkpt += 1
-      if (sinceCkpt >= 1) {
-        val ckpt = weights.localCheckpoint() // eager: reads old blocks
-        if (lastCkpt != null) Dedup.CheckpointHygiene.free(lastCkpt)
-        lastCkpt = ckpt
-        weights = ckpt
-        sinceCkpt = 0
-      }
+      val bw = spark.sparkContext.broadcast(w)
+      val g = examples.treeAggregate(new Array[Long](dim))(
+        (acc, ex) => {
+          val (y, fs) = ex
+          val wv = bw.value
+          var s = 0L
+          fs.foreach(f => s += wv(f))
+          val p = math.max(0L, math.min(1000L, 500L + sdivLong(s, 4L)))
+          val e = p - 1000L * y
+          fs.foreach(f => acc(f) += e)
+          acc
+        },
+        (a, b) => { var i = 0; while (i < a.length) { a(i) += b(i); i += 1 }; a })
+      bw.destroy()
+      w = Array.tabulate(dim)(f => w(f) - sdivLong(g(f) * lrNum, den))
     }
-    val out = weights.select(col("feature_id"), col("weight"))
-      .localCheckpoint()
-    if (lastCkpt != null) Dedup.CheckpointHygiene.free(lastCkpt)
-    f.unpersist()
-    l.unpersist()
-    out
+    examples.unpersist(blocking = false)
+    val bw = spark.sparkContext.broadcast(w)
+    val weight = udf((f: Long) => bw.value(f.toInt))
+    spark.range(dim)
+      .select(col("id").as("feature_id"), weight(col("id")).as("weight"))
   }
 
   /** Score examples with a trained integer model: milli-logit and

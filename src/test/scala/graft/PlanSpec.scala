@@ -624,14 +624,67 @@ class PlanSpec extends AnyFunSuite with SparkTestBase {
       (graft.functions.token_count(col("text")) >= 40).cast("long").as("y"))
     val w = Learn.logisticTrainInt(f, l, 64, iterations = 1)
     w.collect()
-    // the per-iteration plan is consumed by the checkpoint; pin the
-    // forward pass instead — the weights (model-sized) side of the
+    // training itself plans no join (one tree aggregate per iteration
+    // over a broadcast weight array, pinned by the census below); pin
+    // the forward pass instead — the weights (model-sized) side of the
     // score join must broadcast
     val scored = Learn.logisticPredictInt(f, w)
     scored.collect()
     val p = scored.queryExecution.executedPlan.toString
     assert(p.contains("BroadcastHashJoin"),
       s"model join must broadcast the dim-row weights table:\n$p")
+  }
+
+  test("logisticTrainInt census: each extra iteration is one job and moves no shuffle bytes") {
+    import org.apache.spark.scheduler._
+    import org.apache.spark.sql.functions._
+    import graft.operators.Learn
+    val docs = graft.sources.Tables.documents(spark, sf)
+      .filter(col("doc_id") < 120)
+    val f = Learn.hashedFeatures(docs, "doc_id", "text", 64)
+    val l = docs.select(col("doc_id").as("ex_id"),
+      (graft.functions.token_count(col("text")) >= 40).cast("long").as("y"))
+    // (jobs, shuffle bytes written) of one training call. The listener
+    // bus is asynchronous, so a marker job runs after the call: once
+    // its end event arrives, every event of the call has been seen.
+    def census(iterations: Int): (Int, Long) = {
+      val marker = "logisticTrainInt census marker"
+      val jobs = new java.util.concurrent.atomic.AtomicInteger()
+      val bytes = new java.util.concurrent.atomic.AtomicLong()
+      val markerId = new java.util.concurrent.atomic.AtomicInteger(-1)
+      val done = new java.util.concurrent.CountDownLatch(1)
+      val lis = new SparkListener {
+        override def onJobStart(j: SparkListenerJobStart): Unit =
+          if (Option(j.properties).exists(p =>
+              p.getProperty("spark.job.description") == marker))
+            markerId.set(j.jobId)
+          else jobs.incrementAndGet()
+        override def onJobEnd(j: SparkListenerJobEnd): Unit =
+          if (j.jobId == markerId.get) done.countDown()
+        override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
+          if (t.taskMetrics != null)
+            bytes.addAndGet(t.taskMetrics.shuffleWriteMetrics.bytesWritten)
+      }
+      val sc = spark.sparkContext
+      sc.addSparkListener(lis)
+      try {
+        Learn.logisticTrainInt(f, l, 64, iterations).collect()
+        sc.setJobDescription(marker)
+        try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+        assert(done.await(60, java.util.concurrent.TimeUnit.SECONDS),
+          "listener bus did not drain")
+      } finally sc.removeSparkListener(lis)
+      (jobs.get, bytes.get)
+    }
+    val (jobs1, bytes1) = census(1)
+    val (jobs4, bytes4) = census(4)
+    assert(jobs4 - jobs1 == 3,
+      s"3 extra iterations must add 3 jobs: $jobs1 -> $jobs4")
+    assert(bytes4 == bytes1,
+      s"extra iterations must shuffle nothing: $bytes1 -> $bytes4 bytes")
+    // label count (2) + examples build (2) + one aggregate + the
+    // output: the 1-iteration shape measured when this was pinned
+    assert(jobs1 <= 6, s"logisticTrainInt(1 iter) job census grew: $jobs1")
   }
 
   test("robotsDecide: rules join is an equi join on host — no cartesian fallback") {
@@ -1311,8 +1364,9 @@ class PlanSpec extends AnyFunSuite with SparkTestBase {
     // Janino compilations are counted JVM-wide; a warm repeat that
     // compiles anything missed Spark's compiled-code cache, either on a
     // per-call code variant or on an LRU too small for the working set.
-    // q208 then q155 (the iterative-kernels pair) take ~106 cache keys
-    // at sf0.001: under Spark's 100-entry default, q155 evicted q208's
+    // q208 then q155 (the iterative-kernels pair) took ~106 cache keys
+    // at sf0.001 while logisticTrainInt still planned joins per
+    // iteration: under Spark's 100-entry default, q155 evicted q208's
     // oldest classes and the next q208 call compiled 24 of them again.
     def compiles(f: => Unit): Long = {
       val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
@@ -1324,6 +1378,9 @@ class PlanSpec extends AnyFunSuite with SparkTestBase {
     run("q155_logistic_train")
     assert(compiles(run("q208_bfs_levels")) == 0,
       "warm q208 call recompiled generated code")
+    // a repeated training call must plan the same code as the first
+    assert(compiles(run("q155_logistic_train")) == 0,
+      "warm q155 call recompiled generated code")
     // a commit's emptiness check must not plan a LIMIT: Spark names
     // each LocalLimitExec's counter from a JVM-global sequence
     // (_limit_counter_N), so every such plan is new code — and a union

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.SparkTestBase
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Pins [[Learn.logisticTrainInt]] against an independent in-memory
   * reference implementation of the same fixed-point contract, plus
@@ -160,22 +161,25 @@ class LearnSpec extends SparkTestBase {
     assert(got.values.map(_._2).sum <= 1000L) // floors never over-allocate
   }
 
-  // reference trainer: same contract, plain Scala
-  private def refTrain(feats: Seq[(Long, Long)], labels: Map[Long, Long],
-      dim: Int, iters: Int, lrNum: Long, lrDen: Long): Map[Long, Long] = {
+  // reference trainer: same contract, plain Scala. Feature ids and
+  // labels are optional so null rows can be fed; N counts every label
+  // row, and each label row (duplicates included) trains once.
+  private def refTrain(feats: Seq[(Long, Option[Long])],
+      labels: Seq[(Long, Option[Long])], dim: Int, iters: Int,
+      lrNum: Long = 1L, lrDen: Long = 4L): Map[Long, Long] = {
     def sdiv(a: Long, b: Long): Long = if (a >= 0) a / b else -((-a) / b)
     val n = labels.size.toLong
-    val byEx = feats.distinct.groupBy(_._1)
+    val byEx = feats.collect { case (ex, Some(f)) => ex -> f }.distinct
+      .groupMap(_._1)(_._2)
     var w = Map.empty[Long, Long].withDefaultValue(0L)
     (1 to iters).foreach { _ =>
-      val errs = byEx.collect { case (ex, fs) if labels.contains(ex) =>
-        val s = fs.map(f => w(f._2)).sum
+      val errs = labels.collect { case (ex, Some(y)) if byEx.contains(ex) =>
+        val s = byEx(ex).map(w).sum
         val p = math.max(0L, math.min(1000L, 500L + sdiv(s, 4L)))
-        ex -> (p - 1000L * labels(ex))
+        ex -> (p - 1000L * y)
       }
-      val grad = feats.distinct.collect {
-        case (ex, f) if errs.contains(ex) => f -> errs(ex)
-      }.groupBy(_._1).map { case (f, es) => f -> es.map(_._2).sum }
+      val grad = errs.flatMap { case (ex, e) => byEx(ex).map(_ -> e) }
+        .groupMapReduce(_._1)(_._2)(_ + _)
       w = (0L until dim.toLong).map { f =>
         f -> (w(f) - grad.get(f).map(g =>
           sdiv(g * lrNum, n * lrDen)).getOrElse(0L))
@@ -184,21 +188,43 @@ class LearnSpec extends SparkTestBase {
     w
   }
 
+  private def train(feats: Seq[(Long, Option[Long])],
+      labels: Seq[(Long, Option[Long])], dim: Int,
+      iters: Int): Map[Long, Long] =
+    Learn.logisticTrainInt(feats.toDF("ex_id", "feature_id"),
+        labels.toDF("ex_id", "y"), dim, iters)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
   test("logisticTrainInt: matches the independent reference on a random fixture") {
     val rnd = new scala.util.Random(7)
     val dim = 16
     val feats = (0L until 30L).flatMap { ex =>
-      (0 until 1 + rnd.nextInt(5)).map(_ => ex -> rnd.nextInt(dim).toLong)
+      (0 until 1 + rnd.nextInt(5)).map(_ =>
+        ex -> Option(rnd.nextInt(dim).toLong))
     }
-    val labels = (0L until 30L).map(ex => ex -> (ex % 2)).toMap
-    val fDf = feats.toDF("ex_id", "feature_id")
-    val lDf = labels.toSeq.toDF("ex_id", "y")
-    val got = Learn.logisticTrainInt(fDf, lDf, dim, iterations = 5)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val want = refTrain(feats, labels, dim, 5, 1L, 4L)
-    (0L until dim.toLong).foreach { f =>
-      assert(got(f) == want(f), s"feature $f: got ${got(f)} want ${want(f)}")
+    val labels = (0L until 30L).map(ex => ex -> Option(ex % 2))
+    val dupLabels = labels ++ labels.take(7)
+    val nullY = labels.map { case (ex, y) => ex -> y.filter(_ => ex % 5 != 0) }
+    val cases = Seq(
+      "as drawn" -> ((feats, labels)),
+      "duplicate (ex, feature) rows" -> ((feats ++ feats.take(10), labels)),
+      "duplicate label rows" -> ((feats, dupLabels)),
+      "null y" -> ((feats, nullY)),
+      "null and out-of-range feature_id" -> ((feats ++ Seq(
+        1L -> None, 2L -> Some(dim.toLong), 3L -> Some(-1L),
+        4L -> Some(dim + 40L)), labels)),
+      "an example whose features are all out of range" -> ((feats ++ Seq(
+        40L -> Some(dim.toLong), 40L -> Some(-3L), 40L -> None),
+        labels :+ (40L -> Option(1L)))))
+    cases.foreach { case (name, (fs, ls)) =>
+      assert(train(fs, ls, dim, 5) == refTrain(fs, ls, dim, 5), name)
     }
+    // rows that change the model on this fixture: a label row counted
+    // once, or a null-y row left out of N, would train otherwise
+    assert(refTrain(feats, dupLabels, dim, 5) !=
+      refTrain(feats, dupLabels.distinct, dim, 5))
+    assert(refTrain(feats, nullY, dim, 5) !=
+      refTrain(feats, nullY.filter(_._2.isDefined), dim, 5))
   }
 
   test("logisticTrainInt: learns a separable toy; predict is the forward pass") {
@@ -223,8 +249,11 @@ class LearnSpec extends SparkTestBase {
   test("logisticTrainInt: labeled example with no features is inert; unlabeled ignored") {
     val f = Seq((1L, 0L), (2L, 1L), (99L, 2L)).toDF("ex_id", "feature_id")
     val l = Seq((1L, 1L), (2L, 0L), (3L, 1L)).toDF("ex_id", "y") // 3: no feats
-    val w = Learn.logisticTrainInt(f, l, dim = 4, iterations = 1)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val model = Learn.logisticTrainInt(f, l, dim = 4, iterations = 1)
+    assert(model.schema == StructType(Seq(
+      StructField("feature_id", LongType, nullable = false),
+      StructField("weight", LongType, nullable = false))))
+    val w = model.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     // N = 3; err(1) = 500-1000 = -500 -> g(f0) = -500, upd = -(500//12) = -41
     assert(w(0L) == 41L)
     assert(w(1L) == -41L) // err(2) = +500
@@ -244,6 +273,12 @@ class LearnSpec extends SparkTestBase {
     intercept[IllegalArgumentException] {
       Learn.logisticTrainInt(f, l.filter(col("y") < 0), dim = 4, iterations = 1)
     }
+    // the model is a driver-side array broadcast every iteration
+    val big = intercept[IllegalArgumentException] {
+      Learn.logisticTrainInt(f, l, dim = (1 << 24) + 1, iterations = 1)
+    }
+    assert(big.getMessage.contains("dim must be at most 16777216"),
+      big.getMessage)
   }
 
   test("learn-the-gate e2e: train on half the corpus, exact-evaluate on the rest") {
