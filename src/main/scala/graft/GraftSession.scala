@@ -42,9 +42,9 @@ object GraftSession {
     // shuffle-exchange threads and the executor task threads carry
     // different loaders, so every distinct text takes two entries. One
     // iterative-kernels pass (q208 bfsLevels + q155 logistic training,
-    // sf0.01, local[4]; measured while q155 still planned joins every
+    // sf0.01, local[4]; measured while both still planned joins every
     // iteration, before logisticTrainInt became one tree aggregate per
-    // iteration) compiled 829 times over only 65 distinct texts,
+    // iteration and bfsLevels a vertex-partitioned RDD frontier) compiled 829 times over only 65 distinct texts,
     // ~130 keys reused in the same cyclic order every call: the default
     // 100-entry LRU evicted each key before it came round again, so
     // every warm pass re-ran Janino on all 65 texts (~0.5 s of ~2.9

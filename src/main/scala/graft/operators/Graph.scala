@@ -1,7 +1,14 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.{HashPartitioner, SparkEnv}
+import org.apache.spark.rdd.{RDD, ShuffledRDD}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
+
+import scala.collection.mutable
 
 /** Graph analytics for corpus curation — the link-structure quality
   * signals a crawl-scale pretraining pipeline ranks hosts by
@@ -26,6 +33,15 @@ import org.apache.spark.sql.functions._
   * dropped, the standard simplified variant (totals shrink slightly;
   * rankings are unaffected for host-filter use). */
 object Graph {
+
+  /** splitmix64 finalizer — well-spread bits even for sequential or
+    * strided ids. */
+  private def splitmix64(k: Long): Long = {
+    var z = k + 0x9E3779B97F4A7C15L
+    z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
+    z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
+    z ^ (z >>> 31)
+  }
 
   /** Driver-side primitives for the bounded-collect graph fast paths.
     *
@@ -61,13 +77,7 @@ object Graph {
       java.util.Arrays.fill(vals, -1)
       var n = 0
       var ids = new Array[Long](math.max(expectedKeys, 16))
-      private def hash(k: Long): Int = {
-        // splitmix64 finalizer — well-spread for sequential ids
-        var z = k + 0x9E3779B97F4A7C15L
-        z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
-        z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
-        ((z ^ (z >>> 31)) & mask).toInt
-      }
+      private def hash(k: Long): Int = (splitmix64(k) & mask).toInt
       private def grow(): Unit = {
         val ok = keys; val ov = vals
         capBits += 1; mask = (1 << capBits) - 1
@@ -102,12 +112,15 @@ object Graph {
   }
 
   /** Explicit broadcast hint for an iteration-state frame whose row
-    * count the kernel already KNOWS (an observe-fused census or the
-    * |V| driver literal). Checkpointed state frames carry no
+    * count the kernel already KNOWS (an observe-fused census, the |V|
+    * driver literal, or a bound derived from the edge count). Its
+    * users are the PageRank family, HITS, [[earliestArrival]] and
+    * [[ssspBellmanFord]]. Checkpointed state frames carry no
     * statistics, so the planner assumes them enormous and plans
     * SortMergeJoin — re-SORTING the persisted edge cache every round
-    * (measured r18: q208's 1.2M-row edge cache sorted once per BFS
-    * round, ~0.5 s × 32 tasks × 4 rounds). Below
+    * (measured r18 on the join-based BFS that bfsLevels then was: a
+    * 1.2M-row edge cache sorted once per round, ~0.5 s × 32 tasks × 4
+    * rounds). Below
     * `spark.graft.broadcastState.maxRows` (default 1,000,000 skinny
     * rows ≈ 16–24 MB built) the hint restores the BroadcastHashJoin
     * the statistics would have picked; above it the stats-less
@@ -706,7 +719,6 @@ object Graph {
     * interchangeable (and spec-pinned equal). */
   def connectedComponentsStar(pairs: DataFrame, idACol: String,
       idBCol: String, maxRounds: Int = 50): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
     def truncate(df: DataFrame): DataFrame =
       if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
         df.checkpoint(eager = false)
@@ -1211,7 +1223,6 @@ object Graph {
       rounds: Int): DataFrame = {
     require(rounds >= 1 && rounds <= 50,
       s"rounds must be in [1, 50], got $rounds")
-    import org.apache.spark.storage.StorageLevel
     val und = edges
       .select(col(srcCol).cast("long").as("__a"),
         col(dstCol).cast("long").as("__b"))
@@ -1331,20 +1342,30 @@ object Graph {
   /** Multi-source BFS levels — shortest hop distance from a seed SET
     * (the crawl-frontier "how far is this page from the seeds"
     * signal, and the reachability primitive under k-hop neighborhood
-    * mining). Returns `(node, level)` for every node reached within
-    * `maxDepth` hops, level = the MINIMUM hop count (seeds at 0);
-    * unreached nodes are absent (reachability semantics — outer-join
-    * downstream for "∞").
+    * mining). Returns `(node BIGINT, level BIGINT NOT NULL)` for every
+    * node reached within `maxDepth` hops, level = the MINIMUM hop
+    * count (seeds at 0); unreached nodes are absent (reachability
+    * semantics — outer-join downstream for "∞"). Seeds not present in
+    * the graph still report level 0 (they are trivially reachable from
+    * themselves). Nulls are not nodes: null seeds and edges with a
+    * null endpoint are dropped.
     *
-    * The canonical distributed frontier iteration: per round ONE
-    * join (frontier × edges) + distinct + anti-join against the
-    * visited set — each frontier localCheckpoint'd, so lineage stays
-    * flat and the visited set is a union of materialized frontiers,
-    * never a recursive plan (the q174/q134 hygiene). Early exit on
-    * an empty frontier costs one bounded `isEmpty` action per round.
-    * Seeds arrive as a DataFrame — no driver-side collect; seeds not
-    * present in the graph still report level 0 (they are trivially
-    * reachable from themselves).
+    * Vertex-partitioned frontier (the Pregel shape, Malewicz et al.
+    * 2010): each node is owned by one of `spark.sql.shuffle.partitions`
+    * partitions, by a hash of its id. The edges are routed to the
+    * owner of their `src` once and kept as one persisted CSR adjacency
+    * per partition; the BFS state lives beside it, co-partitioned: the
+    * partition's visited nodes sorted, their levels and the frontier.
+    * A round is ONE job with ONE shuffle: each partition expands its
+    * frontier against its own adjacency and sends the deduped
+    * neighbour ids (ids only) to their owners, which merge them
+    * against their sorted visited nodes; the ones not visited yet form
+    * the next frontier. The new state is localCheckpoint'd, and
+    * collecting its per-partition frontier sizes is the round's one
+    * action — it materializes the state and decides the early exit on
+    * an empty frontier. The visited set never leaves its partition and
+    * no round plans a query. Seeds arrive as a DataFrame — no
+    * driver-side collect.
     *
     * The q208 oracle is a true `WITH RECURSIVE` BFS in DuckDB over
     * the same edges — exact, not unrolled. */
@@ -1352,47 +1373,212 @@ object Graph {
       sources: DataFrame, sourceCol: String, maxDepth: Int): DataFrame = {
     require(maxDepth >= 1 && maxDepth <= 50,
       s"maxDepth must be in [1, 50], got $maxDepth")
-    // cached once (materialized inside persistForKey), hash(src)-keyed
-    // above the size threshold so every round's frontier ⋈ edges probe
-    // reads the cache with zero additional Exchange at scale
-    val (e, _) = persistForKey(edges
-      .select(col(srcCol).cast("long").as("src"),
-        col(dstCol).cast("long").as("dst"))
-      .distinct(), "src")
-    // frontier size FUSED into each checkpoint via observe (the SCC
-    // truncateCounted pattern): the old per-round isEmpty was one
-    // whole extra job per round
-    def ckptCounted(df: DataFrame): (DataFrame, Long) = {
-      val obs = org.apache.spark.sql.Observation()
-      val ck = df.observe(obs, count(lit(1)).as("n")).localCheckpoint()
-      (ck, obs.get("n").asInstanceOf[Long])
+    import Frontier._
+    val spark = edges.sparkSession
+    val n = spark.sessionState.conf.numShufflePartitions
+    val part = new HashPartitioner(n)
+    // (owner, ids) messages are keyed by partition id, which
+    // HashPartitioner maps to itself: each lands on its owner. The
+    // session's own serializer moves them: left to itself Spark picks
+    // Kryo for primitive-array shuffles even under JavaSerializer
+    // sessions, and Kryo fails on JDK 17 without the java.nio
+    // --add-opens flag.
+    def deliver(msgs: RDD[(Int, Array[Long])]): RDD[(Int, Array[Long])] =
+      new ShuffledRDD[Int, Array[Long], Array[Long]](msgs, part)
+        .setSerializer(SparkEnv.get.serializer)
+    def routed(df: DataFrame): RDD[(Int, Array[Long])] = {
+      val width = df.columns.length
+      deliver(df.queryExecution.toRdd.mapPartitions(route(_, width, n)))
     }
-    var (frontier, frontierN) = ckptCounted(sources
-      .select(col(sourceCol).cast("long").as("node")).distinct()
-      .withColumn("level", lit(0L)))
-    val parts = scala.collection.mutable.ArrayBuffer(frontier)
-    var visited = frontier
-    var visitedN = frontierN
+    val adj = routed(edges.select(col(srcCol).cast("long"), col(dstCol).cast("long")))
+      .mapPartitions(c => Iterator(Adjacency(c)), preservesPartitioning = true)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    // computed by round 1's job; its frontier size is learned there
+    var state = routed(sources.select(col(sourceCol).cast("long")))
+      .mapPartitions(c => Iterator(State.Empty.advance(gather(c), 0)),
+        preservesPartitioning = true)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    var frontierN = -1L
     var depth = 0
-    while (depth < maxDepth && frontierN > 0) {
+    while (depth < maxDepth && frontierN != 0) {
       depth += 1
-      // both state sides carry their observe-fused counts, so the
-      // known-small sides broadcast (hintSmall) instead of the
-      // stats-less SMJ re-sorting the edge cache every round
-      val frontH = hintSmall(frontier, frontierN)
-      val (next, nextN) = ckptCounted(
-        frontH.join(e, frontH("node") === e("src"))
-          .select(e("dst").as("node")).distinct()
-          .join(hintSmall(visited, visitedN), Seq("node"), "left_anti")
-          .withColumn("level", lit(depth.toLong)))
-      parts += next
-      visited = visited.unionByName(next)
-      visitedN += nextN
-      frontier = next
-      frontierN = nextN
+      val level = depth
+      val msgs = deliver(adj.zipPartitions(state) { (a, s) =>
+        scatter(a.next().expand(s.next().frontier), n)
+      })
+      val next = state.zipPartitions(msgs, preservesPartitioning = true) {
+          (s, m) => Iterator(s.next().advance(gather(m), level))
+        }.localCheckpoint()
+      frontierN = next.map(_.frontier.length.toLong).collect().sum
+      state.unpersist(blocking = false)
+      state = next
     }
-    e.unpersist()
-    parts.reduce(_ unionByName _)
+    adj.unpersist(blocking = false)
+    spark.createDataFrame(state.flatMap(_.rows), StructType(Seq(
+      StructField("node", LongType),
+      StructField("level", LongType, nullable = false))))
+  }
+
+  /** The per-partition pieces of [[bfsLevels]]: node ownership, the
+    * routing of ids to their owners, the adjacency and the BFS state.
+    * Primitive arrays and sorted merges only: no boxed id per node or
+    * edge. */
+  private object Frontier {
+    def owner(v: Long, n: Int): Int =
+      java.lang.Math.floorMod(splitmix64(v), n.toLong).toInt
+
+    /** What `fill` adds to each owner's bucket, as one (owner, values)
+      * message per non-empty bucket. */
+    private def byOwner(n: Int)(
+        fill: Array[mutable.ArrayBuilder.ofLong] => Unit): Iterator[(Int, Array[Long])] = {
+      val bufs = Array.fill(n)(new mutable.ArrayBuilder.ofLong)
+      fill(bufs)
+      Iterator.range(0, n).filter(bufs(_).length > 0).map(p => p -> bufs(p).result())
+    }
+
+    /** Rows of `width` BIGINT columns, laid flat, bucketed by the owner
+      * of column 0; rows with a null column are dropped. A task holds
+      * its input as primitive arrays, 8 B per value — the bound the
+      * adjacency itself keeps. */
+    def route(rows: Iterator[InternalRow], width: Int,
+        n: Int): Iterator[(Int, Array[Long])] = byOwner(n) { bufs =>
+      rows.foreach { r =>
+        var c = 0
+        while (c < width && !r.isNullAt(c)) c += 1
+        if (c == width) {
+          val b = bufs(owner(r.getLong(0), n))
+          c = 0
+          while (c < width) { b += r.getLong(c); c += 1 }
+        }
+      }
+    }
+
+    /** Ids bucketed by owner. */
+    def scatter(ids: Array[Long], n: Int): Iterator[(Int, Array[Long])] =
+      byOwner(n)(bufs => ids.foreach(v => bufs(owner(v, n)) += v))
+
+    /** Every id the messages carry, sorted and deduped. */
+    def gather(msgs: Iterator[(Int, Array[Long])]): Array[Long] = {
+      val b = new mutable.ArrayBuilder.ofLong
+      msgs.foreach(m => b ++= m._2)
+      sortedUnique(b.result())
+    }
+
+    /** Sorts `a` in place and returns its distinct values. */
+    def sortedUnique(a: Array[Long]): Array[Long] = {
+      java.util.Arrays.sort(a)
+      var w = 0
+      var i = 0
+      while (i < a.length) {
+        if (w == 0 || a(w - 1) != a(i)) { a(w) = a(i); w += 1 }
+        i += 1
+      }
+      if (w == a.length) a else java.util.Arrays.copyOf(a, w)
+    }
+
+    /** One partition's out-edges (CSR): `src` sorted unique, and the
+      * targets of `src(k)`, sorted unique, at `dst(off(k) until off(k+1))`. */
+    final class Adjacency(src: Array[Long], off: Array[Int],
+        dst: Array[Long]) extends Serializable {
+      /** The out-neighbours of the sorted `frontier`, sorted and deduped. */
+      def expand(frontier: Array[Long]): Array[Long] = {
+        val b = new mutable.ArrayBuilder.ofLong
+        var i = 0
+        var k = 0
+        while (i < frontier.length && k < src.length) {
+          if (frontier(i) < src(k)) i += 1
+          else if (frontier(i) > src(k)) k += 1
+          else {
+            var j = off(k)
+            while (j < off(k + 1)) { b += dst(j); j += 1 }
+            i += 1; k += 1
+          }
+        }
+        sortedUnique(b.result())
+      }
+    }
+
+    object Adjacency {
+      /** From (owner, flat (src, dst) pairs) chunks. */
+      def apply(chunks: Iterator[(Int, Array[Long])]): Adjacency = {
+        val b = new mutable.ArrayBuilder.ofLong
+        chunks.foreach(c => b ++= c._2)
+        val pairs = b.result()
+        val m = pairs.length / 2
+        val keys = new Array[Long](m)
+        var i = 0
+        while (i < m) { keys(i) = pairs(2 * i); i += 1 }
+        val src = sortedUnique(keys)
+        // counting sort of the targets by source rank
+        val at = new Array[Int](m)
+        val off = new Array[Int](src.length + 1)
+        i = 0
+        while (i < m) {
+          at(i) = java.util.Arrays.binarySearch(src, pairs(2 * i))
+          off(at(i) + 1) += 1
+          i += 1
+        }
+        var k = 0
+        while (k < src.length) { off(k + 1) += off(k); k += 1 }
+        val dst = new Array[Long](m)
+        val fill = java.util.Arrays.copyOf(off, src.length)
+        i = 0
+        while (i < m) { dst(fill(at(i))) = pairs(2 * i + 1); fill(at(i)) += 1; i += 1 }
+        // sort and dedupe each source's run, compacting in place
+        var w = 0
+        var lo = 0
+        k = 0
+        while (k < src.length) {
+          val hi = off(k + 1)
+          java.util.Arrays.sort(dst, lo, hi)
+          val from = w
+          var j = lo
+          while (j < hi) {
+            if (w == from || dst(w - 1) != dst(j)) { dst(w) = dst(j); w += 1 }
+            j += 1
+          }
+          off(k + 1) = w
+          lo = hi
+          k += 1
+        }
+        new Adjacency(src, off, java.util.Arrays.copyOf(dst, w))
+      }
+    }
+
+    /** One partition's BFS state: its visited nodes sorted, their
+      * levels, and the frontier (the nodes the last round visited). */
+    final class State(nodes: Array[Long], levels: Array[Int],
+        val frontier: Array[Long]) extends Serializable {
+      /** Visits the ids of sorted unique `reached` not visited yet, at
+        * `level`; they become the frontier. One merge pass. */
+      def advance(reached: Array[Long], level: Int): State = {
+        val nn = new Array[Long](nodes.length + reached.length)
+        val nl = new Array[Int](nn.length)
+        val fresh = new mutable.ArrayBuilder.ofLong
+        var i = 0
+        var j = 0
+        var w = 0
+        while (i < nodes.length || j < reached.length) {
+          if (j == reached.length || (i < nodes.length && nodes(i) <= reached(j))) {
+            if (j < reached.length && nodes(i) == reached(j)) j += 1
+            nn(w) = nodes(i); nl(w) = levels(i); i += 1
+          } else {
+            nn(w) = reached(j); nl(w) = level; fresh += reached(j); j += 1
+          }
+          w += 1
+        }
+        new State(java.util.Arrays.copyOf(nn, w), java.util.Arrays.copyOf(nl, w),
+          fresh.result())
+      }
+
+      def rows: Iterator[Row] =
+        Iterator.range(0, nodes.length).map(i => Row(nodes(i), levels(i).toLong))
+    }
+
+    object State {
+      val Empty = new State(Array.emptyLongArray, Array.emptyIntArray,
+        Array.emptyLongArray)
+    }
   }
 
   /** Time-respecting earliest arrival over a TEMPORAL edge list
@@ -1407,9 +1593,12 @@ object Graph {
     * `rounds` label-correcting iterations (each allows one more hop;
     * arrival values only DECREASE, so the iteration is monotone and
     * any fixed round count is a defined, replayable semantics —
-    * exact once rounds ≥ temporal diameter). Per round: one
-    * (arrivals ⋈ edges on src, t ≥ arrival) join + one min-aggregate
-    * — the bfsLevels shuffle discipline, checkpointed lineage. */
+    * exact once rounds ≥ temporal diameter). Per round: the arrivals
+    * (broadcast when 2·|E|, the kernel's bound on their rows, is under
+    * the [[hintSmall]] cap) join the persisted edges on src with
+    * t ≥ arrival, the relaxed arrivals are unioned with the old ones,
+    * and one min-aggregate on node keeps the earliest; the result is
+    * localCheckpoint'd, so lineage stays one round deep. */
   def earliestArrival(edges: DataFrame, srcCol: String, dstCol: String,
       tsCol: String, seeds: DataFrame, seedCol: String, seedTs: Long,
       rounds: Int): DataFrame = {
@@ -1448,10 +1637,13 @@ object Graph {
     * monotone; negative weights are accepted under the bounded-hop
     * definition (no divergence is possible in finitely many rounds).
     *
-    * Per round: one (dist ⋈ edges) join + one min-aggregate — skinny
-    * (id, dist) rows, checkpointed lineage, the bfsLevels shuffle
-    * discipline. Unreached nodes are absent (callers left-join their
-    * node table; absence ≠ infinity conflation). */
+    * Per round: the distances (broadcast when 2·|E|, the kernel's
+    * bound on their rows, is under the [[hintSmall]] cap) join the
+    * persisted min-weight edges on src, the relaxed distances are
+    * unioned with the old ones, and one min-aggregate on node keeps
+    * the shortest — skinny (id, dist) rows, localCheckpoint'd every
+    * round. Unreached nodes are absent (callers left-join their node
+    * table; absence ≠ infinity conflation). */
   def ssspBellmanFord(edges: DataFrame, srcCol: String, dstCol: String,
       weightCol: String, sources: DataFrame, sourceCol: String,
       rounds: Int): DataFrame = {

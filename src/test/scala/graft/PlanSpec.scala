@@ -635,8 +635,41 @@ class PlanSpec extends AnyFunSuite with SparkTestBase {
       s"model join must broadcast the dim-row weights table:\n$p")
   }
 
-  test("logisticTrainInt census: each extra iteration is one job and moves no shuffle bytes") {
+  /** (jobs, shuffle bytes written) of `f`. The listener bus is
+    * asynchronous, so a marker job runs after `f`: once its end event
+    * arrives, every event of `f` has been seen. */
+  private def jobCensus(f: => Unit): (Int, Long) = {
     import org.apache.spark.scheduler._
+    val marker = "job census marker"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val bytes = new java.util.concurrent.atomic.AtomicLong()
+    val markerId = new java.util.concurrent.atomic.AtomicInteger(-1)
+    val done = new java.util.concurrent.CountDownLatch(1)
+    val lis = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (Option(j.properties).exists(p =>
+            p.getProperty("spark.job.description") == marker))
+          markerId.set(j.jobId)
+        else jobs.incrementAndGet()
+      override def onJobEnd(j: SparkListenerJobEnd): Unit =
+        if (j.jobId == markerId.get) done.countDown()
+      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
+        if (t.taskMetrics != null)
+          bytes.addAndGet(t.taskMetrics.shuffleWriteMetrics.bytesWritten)
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(lis)
+    try {
+      f
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      assert(done.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "listener bus did not drain")
+    } finally sc.removeSparkListener(lis)
+    (jobs.get, bytes.get)
+  }
+
+  test("logisticTrainInt census: each extra iteration is one job and moves no shuffle bytes") {
     import org.apache.spark.sql.functions._
     import graft.operators.Learn
     val docs = graft.sources.Tables.documents(spark, sf)
@@ -644,38 +677,8 @@ class PlanSpec extends AnyFunSuite with SparkTestBase {
     val f = Learn.hashedFeatures(docs, "doc_id", "text", 64)
     val l = docs.select(col("doc_id").as("ex_id"),
       (graft.functions.token_count(col("text")) >= 40).cast("long").as("y"))
-    // (jobs, shuffle bytes written) of one training call. The listener
-    // bus is asynchronous, so a marker job runs after the call: once
-    // its end event arrives, every event of the call has been seen.
-    def census(iterations: Int): (Int, Long) = {
-      val marker = "logisticTrainInt census marker"
-      val jobs = new java.util.concurrent.atomic.AtomicInteger()
-      val bytes = new java.util.concurrent.atomic.AtomicLong()
-      val markerId = new java.util.concurrent.atomic.AtomicInteger(-1)
-      val done = new java.util.concurrent.CountDownLatch(1)
-      val lis = new SparkListener {
-        override def onJobStart(j: SparkListenerJobStart): Unit =
-          if (Option(j.properties).exists(p =>
-              p.getProperty("spark.job.description") == marker))
-            markerId.set(j.jobId)
-          else jobs.incrementAndGet()
-        override def onJobEnd(j: SparkListenerJobEnd): Unit =
-          if (j.jobId == markerId.get) done.countDown()
-        override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-          if (t.taskMetrics != null)
-            bytes.addAndGet(t.taskMetrics.shuffleWriteMetrics.bytesWritten)
-      }
-      val sc = spark.sparkContext
-      sc.addSparkListener(lis)
-      try {
-        Learn.logisticTrainInt(f, l, 64, iterations).collect()
-        sc.setJobDescription(marker)
-        try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-        assert(done.await(60, java.util.concurrent.TimeUnit.SECONDS),
-          "listener bus did not drain")
-      } finally sc.removeSparkListener(lis)
-      (jobs.get, bytes.get)
-    }
+    def census(iterations: Int): (Int, Long) =
+      jobCensus(Learn.logisticTrainInt(f, l, 64, iterations).collect(): Unit)
     val (jobs1, bytes1) = census(1)
     val (jobs4, bytes4) = census(4)
     assert(jobs4 - jobs1 == 3,
@@ -685,6 +688,22 @@ class PlanSpec extends AnyFunSuite with SparkTestBase {
     // label count (2) + examples build (2) + one aggregate + the
     // output: the 1-iteration shape measured when this was pinned
     assert(jobs1 <= 6, s"logisticTrainInt(1 iter) job census grew: $jobs1")
+  }
+
+  test("bfsLevels census: each extra round is one job; the early exit runs none past the eccentricity") {
+    import org.apache.spark.sql.functions._
+    // the directed chain 0 -> 1 -> ... -> 5 from seed 0: eccentricity
+    // 5, so round 6 finds an empty frontier and no round runs after it
+    val edges = spark.range(5).select(col("id").as("s"), (col("id") + 1).as("t"))
+    val seeds = spark.range(1).select(col("id").as("n"))
+    def jobs(maxDepth: Int): Int = jobCensus(operators.Graph.bfsLevels(
+      edges, "s", "t", seeds, "n", maxDepth).collect(): Unit)._1
+    val j = Seq(1, 2, 3, 6, 20).map(d => d -> jobs(d)).toMap
+    assert(j(2) - j(1) == 1 && j(3) - j(2) == 1 && j(6) - j(3) == 3,
+      s"each extra round must add one job: $j")
+    assert(j(20) == j(6), s"rounds past the eccentricity must not run: $j")
+    // one job per round plus the output's: measured when this was pinned
+    assert(j(1) <= 2, s"bfsLevels(1 round) job census grew: ${j(1)}")
   }
 
   test("robotsDecide: rules join is an equi join on host — no cartesian fallback") {

@@ -439,6 +439,62 @@ class GraphSpec extends SparkTestBase {
     assert(run(sym, Seq(4L), 3) == Map(4L -> 0L, 3L -> 1L, 2L -> 2L, 1L -> 3L))
   }
 
+  /** driver-side multi-source BFS: min hop level per reached node */
+  private def bfsRef(edges: Seq[(Long, Long)], seeds: Seq[Long],
+      maxDepth: Int): Map[Long, Long] = {
+    val adj = edges.groupMap(_._1)(_._2)
+    var level = seeds.map(_ -> 0L).toMap
+    var frontier = seeds.distinct
+    var d = 0
+    while (d < maxDepth && frontier.nonEmpty) {
+      d += 1
+      frontier = frontier.flatMap(adj.getOrElse(_, Nil)).distinct
+        .filterNot(level.contains)
+      level ++= frontier.map(_ -> d.toLong)
+    }
+    level
+  }
+
+  test("bfsLevels equals a driver-side BFS on random graphs at 1, 4 and 7 partitions") {
+    import org.apache.spark.sql.types._
+    val key = "spark.sql.shuffle.partitions"
+    val rnd = new scala.util.Random(208)
+    // ids in [-6, 10): negative ids, self-loops and repeated edges
+    // occur; seeds up to 12 are often absent from the graph
+    val cases = Seq.fill(20) {
+      val es = Seq.fill(rnd.nextInt(30))((rnd.nextInt(16) - 6L, rnd.nextInt(16) - 6L))
+      val dup = es.take(rnd.nextInt(4))
+      val seeds = Seq.fill(1 + rnd.nextInt(3))(rnd.nextInt(19) - 6L)
+      (es ++ dup, seeds, Seq(1, 2, 3, 50)(rnd.nextInt(4)))
+    } ++ Seq(
+      // a 6-cycle: done after 6 rounds whatever maxDepth allows
+      ((0L until 6L).map(i => (i, (i + 1) % 6)), Seq(0L), 50),
+      // a self-loop and a duplicated edge under a depth cap
+      (Seq((3L, 3L), (3L, -4L), (3L, -4L), (-4L, 5L), (5L, 6L)), Seq(3L), 2))
+    val old = spark.conf.get(key)
+    try for (p <- Seq(1, 4, 7)) {
+      spark.conf.set(key, p.toString)
+      cases.foreach { case (es, seeds, d) =>
+        val df = Graph.bfsLevels(es.toDF("s", "t"), "s", "t", seeds.toDF("n"), "n", d)
+        assert(df.schema == StructType(Seq(StructField("node", LongType),
+          StructField("level", LongType, nullable = false))))
+        // one row per reached node
+        assert(df.as[(Long, Long)].collect().sorted.toSeq ==
+          bfsRef(es, seeds, d).toSeq.sorted,
+          s"partitions=$p depth=$d seeds=$seeds edges=$es")
+      }
+    } finally spark.conf.set(key, old)
+  }
+
+  test("bfsLevels: null seeds and edges with a null endpoint are not nodes") {
+    val edges = Seq[(Option[Long], Option[Long])]((Some(1L), Some(2L)),
+      (Some(2L), None), (None, Some(3L)), (Some(2L), Some(4L))).toDF("s", "t")
+    val seeds = Seq(Some(1L), None).toDF("n")
+    val got = Graph.bfsLevels(edges, "s", "t", seeds, "n", 4).collect()
+      .map(r => (Option(r.get(0)), r.getLong(1))).toSeq
+    assert(got.sortBy(_._2) == Seq((Some(1L), 0L), (Some(2L), 1L), (Some(4L), 2L)))
+  }
+
   test("ssspBellmanFord: relaxation beats direct edge, round cap binds, negatives ok") {
     import spark.implicits._
     val e = Seq((1L, 2L, 5L), (2L, 3L, 1L), (1L, 3L, 10L), (3L, 4L, -2L))
