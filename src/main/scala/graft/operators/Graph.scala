@@ -25,14 +25,17 @@ import scala.collection.mutable
   *
   * Scale shape: the edge and degree tables are built once and
   * persisted (read `iterations` times); each iteration is ONE shuffle
-  * join (rank ⋈ edges on src) + one hash aggregate on dst + the
-  * rebase join — the canonical distributed power-iteration shape.
-  * Rank lineage is checkpointed every few iterations so deep
-  * iteration counts don't build deep plans (the
-  * [[Dedup.connectedComponents]] hygiene). Dangling-node mass is
+  * join (rank ⋈ edges on src) + one hash aggregate on dst — the
+  * canonical distributed power-iteration shape. Rank lineage is
+  * checkpointed every few iterations so deep iteration counts don't
+  * build deep plans. Every checkpoint, keyed cache and broadcast
+  * decision of the iterative kernels below is made by
+  * [[Dedup.CheckpointHygiene]]. Dangling-node mass is
   * dropped, the standard simplified variant (totals shrink slightly;
   * rankings are unaffected for host-filter use). */
 object Graph {
+  import Dedup.CheckpointHygiene
+  import CheckpointHygiene.{Rolling, broadcastIfSmall, materialize, persistForKey}
 
   /** splitmix64 finalizer — well-spread bits even for sequential or
     * strided ids. */
@@ -45,8 +48,8 @@ object Graph {
 
   /** Driver-side primitives for the bounded-collect graph fast paths.
     *
-    * Heap bound (r17 verdict item 7): the cap is
-    * `spark.graft.driverGraph.maxEdges`, default 500,000 edges. At the
+    * Heap bound (r17 verdict item 7): the cap is the kernels'
+    * `driverCap` parameter, default 500,000 edges. At the
     * cap the transient `collect()`ed Row array is ~50 MB and the
     * persistent driver state is primitive arrays only — for ≤ 2·cap
     * distinct nodes: one open-addressed long→int id map (2 arrays,
@@ -58,10 +61,6 @@ object Graph {
     * the collected rows (the r17 shape held multi-GB of boxed state at
     * its 5M-row cap — guide §5: the driver is the bottleneck). */
   private object DriverGraph {
-    def cap(spark: org.apache.spark.sql.SparkSession): Long =
-      spark.conf.getOption("spark.graft.driverGraph.maxEdges")
-        .map(_.toLong).getOrElse(500000L)
-
     /** Open-addressed long→int map (linear probing, power-of-two
       * capacity, ≤ 50% load) assigning DENSE int ids on first sight;
       * `ids(dense)` recovers the original long. */
@@ -111,54 +110,6 @@ object Graph {
     }
   }
 
-  /** Explicit broadcast hint for an iteration-state frame whose row
-    * count the kernel already KNOWS (an observe-fused census, the |V|
-    * driver literal, or a bound derived from the edge count). Its
-    * users are the PageRank family, HITS, [[earliestArrival]] and
-    * [[ssspBellmanFord]]. Checkpointed state frames carry no
-    * statistics, so the planner assumes them enormous and plans
-    * SortMergeJoin — re-SORTING the persisted edge cache every round
-    * (measured r18 on the join-based BFS that bfsLevels then was: a
-    * 1.2M-row edge cache sorted once per round, ~0.5 s × 32 tasks × 4
-    * rounds). Below
-    * `spark.graft.broadcastState.maxRows` (default 1,000,000 skinny
-    * rows ≈ 16–24 MB built) the hint restores the BroadcastHashJoin
-    * the statistics would have picked; above it the stats-less
-    * sort-merge posture stands unchanged (guide §3.1 — hint exactly
-    * when the engine, not the planner, knows a side is small). */
-  private def hintSmall(df: DataFrame, rows: Long): DataFrame = {
-    val cap = df.sparkSession.conf
-      .getOption("spark.graft.broadcastState.maxRows")
-      .map(_.toLong).getOrElse(1000000L)
-    if (rows >= 0 && rows <= cap) broadcast(df) else df
-  }
-
-  /** Materialize `df` into the cache for repeated per-iteration joins
-    * on `key`, and RETURN ITS ROW COUNT alongside. Above
-    * `spark.graft.keyedCache.minRows` (default 200k) the cache is
-    * re-laid-out hash(`key`) first, so every iteration's
-    * `state ⋈ edges` probe and every `groupBy(key)` aggregate read it
-    * with ZERO additional Exchange (guide §2.4) — at 100 TB that is
-    * `iterations` full-edge shuffles saved for one extra cache pass.
-    * Below the threshold the AQE-coalesced layout stands: a fixture-
-    * sized fixpoint reads its cache dozens of times, and pinning 32
-    * near-empty partitions costs more task launches than the (absent,
-    * broadcast-joined) exchanges could ever save — the partitioning
-    * derives from measured input size, never from a constant tuned
-    * for either local mode or the cluster. */
-  private def persistForKey(df: DataFrame, key: String): (DataFrame, Long) = {
-    val minRows = df.sparkSession.conf.getOption("spark.graft.keyedCache.minRows")
-      .map(_.toLong).getOrElse(200000L)
-    val base = df.persist()
-    val n = base.count()
-    if (n >= minRows) {
-      val keyed = base.repartition(col(key)).persist()
-      keyed.count()
-      base.unpersist()
-      (keyed, n)
-    } else (base, n)
-  }
-
   /** PageRank over the distinct (src, dst) edges of `edges`, with
     * damping `dampNum/dampDen` (default 85/100) and ranks in integer
     * units of `1/scale`: every node starts at `scale/|V|` units and
@@ -168,7 +119,9 @@ object Graph {
     *          + (dampNum · Σ_{u→v} (pr(u) / outdeg(u))) / dampDen
     *
     * with EVERY division a BIGINT floor. Returns `(node, pr_units)`,
-    * one row per distinct node (isolated sources/sinks included). */
+    * one row per distinct node (isolated sources/sinks included); an
+    * empty edge set gives an empty frame. This is [[powerIteration]]
+    * with every edge weighing 1 and every node a seed. */
   def pageRankInt(edges: DataFrame, srcCol: String, dstCol: String,
                   iterations: Int, scale: Long = 1000000000000L,
                   dampNum: Long = 85L, dampDen: Long = 100L): DataFrame = {
@@ -177,67 +130,11 @@ object Graph {
     require(dampNum > 0 && dampNum < dampDen, s"need 0 < $dampNum < $dampDen")
     require(scale > 0 && scale <= Long.MaxValue / (dampDen * 2),
       s"scale must be in (0, ${Long.MaxValue / (dampDen * 2)}] so damped sums cannot overflow, got $scale")
-    // cached once, hash(src)-keyed above the size threshold so the
-    // per-iteration join reads it exchange-free at scale
-    // (persistForKey). The OUT-DEGREE is denormalized onto the edge
-    // table at build (one static self-aggregate join — ReuseExchange
-    // collapses the two reads of the deduped set) instead of being a
-    // separate per-iteration join: `iterations` joins of the full
-    // edge stream against outdeg collapse into one build-time join
-    // (guide §2.4 — same quotients, pr div __deg is unchanged).
-    val dd = edges
+    val unit = edges
       .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
       .distinct()
-    val (e, _) = persistForKey(
-      dd.join(dd.groupBy("src").agg(count(lit(1)).as("__deg")), "src"), "src")
-    val nodes = e.select(col("src").as("node"))
-      .unionByName(e.select(col("dst").as("node"))).distinct().persist()
-    // |V| as a driver long: the old per-iteration crossJoin(broadcast)
-    // of the 1-row count re-built a broadcast exchange in every
-    // checkpointed plan segment; a literal is free and floors the
-    // same way ((scale*15//100)//n — the oracle association)
-    val n = nodes.count()
-    // teleport base, driver-exact integers: (scale·(dd−dn))/dd is an
-    // exact long, as is the /|V| floor (both operands nonnegative —
-    // same quotient as the old in-plan `div`). n = 0 (empty edge set)
-    // keeps the old behavior: nodes is empty, so the loop's frames are
-    // empty whatever the literals hold.
-    val teleport = scale * (dampDen - dampNum) / dampDen
-    val initPr = if (n > 0) scale / n else 0L
-    val teleBase = if (n > 0) teleport / n else 0L
-    // `div` (integral division), never `/`: long / long is DOUBLE
-    // division in Spark, and floor(double) drifts from the true
-    // BIGINT quotient once operands outgrow 2^53 — div is exact at
-    // any scale, and it is what the DuckDB oracle's `//` computes
-    var pr = nodes.select(col("node"), lit(initPr).as("pr"))
-    var lastCkpt: DataFrame = null
-    for (i <- 1 to iterations) {
-      // the dangling-node rebase rides the SAME aggregate as the edge
-      // contributions (a zero row per node unioned into the one
-      // hash(dst) exchange) instead of a second nodes ⋈ contrib join
-      // per iteration — one exchange, identical sums: absent inbound
-      // mass aggregates to exactly the old coalesce(__s, 0) (§2.4)
-      val prH = hintSmall(pr, n)
-      pr = prH.join(e, prH("node") === e("src"))
-        .select(col("dst"), expr("pr div __deg").as("__c"))
-        .unionByName(nodes.select(col("node").as("dst"), lit(0L).as("__c")))
-        .groupBy(col("dst")).agg(sum(col("__c")).as("__s"))
-        .select(col("dst").as("node"),
-          (lit(teleBase) +
-            expr(s"(CAST($dampNum AS BIGINT) * __s) div $dampDen"))
-            .cast("long").as("pr"))
-      if (i % 3 == 0 && i < iterations) {
-        pr = pr.localCheckpoint()
-        if (lastCkpt != null) Dedup.CheckpointHygiene.free(lastCkpt)
-        lastCkpt = pr
-      }
-    }
-    val out = pr
-    // materialize the final frame before releasing the inputs it reads
-    val result = out.localCheckpoint()
-    if (lastCkpt != null) Dedup.CheckpointHygiene.free(lastCkpt)
-    e.unpersist(); nodes.unpersist()
-    result
+      .withColumn("__w", lit(1L))
+    powerIteration(unit, None, iterations, scale, dampNum, dampDen, checkWeights = false)
   }
 
   /** Weight-aware [[pageRankInt]]: rank flows along (src, dst, w)
@@ -253,12 +150,7 @@ object Graph {
     * BIGINT floor, so the q163 oracle unrolls it exactly. Setting
     * every weight equal reduces to the unweighted ranks
     * (⌊k·a / (k·b)⌋ = ⌊a/b⌋ — spec-pinned). Overflow is guarded
-    * against the MEASURED max edge weight (one extra aggregate at
-    * build, which also materializes the persisted edge table).
-    *
-    * Scale shape unchanged: one join + one hash aggregate per
-    * iteration, edges/weights persisted once, checkpoints every 3
-    * rounds. */
+    * against the MEASURED max edge weight. */
   def pageRankWeightedInt(edges: DataFrame, srcCol: String, dstCol: String,
       weightCol: String, iterations: Int, scale: Long = 1000000000000L,
       dampNum: Long = 85L, dampDen: Long = 100L): DataFrame = {
@@ -267,61 +159,8 @@ object Graph {
     require(dampNum > 0 && dampNum < dampDen, s"need 0 < $dampNum < $dampDen")
     require(scale > 0 && scale <= Long.MaxValue / (dampDen * 2),
       s"scale must be in (0, ${Long.MaxValue / (dampDen * 2)}], got $scale")
-    // cached once, hash(src)-keyed above the size threshold so the
-    // per-iteration join reads it exchange-free at scale
-    // (persistForKey). The per-source weight TOTAL is denormalized
-    // onto the edge table at build (the pageRankInt rationale: one
-    // static self-aggregate join replaces `iterations` per-round
-    // joins; (pr·w) div totw is unchanged).
-    val ew = edges
-      .select(col(srcCol).cast("long").as("src"),
-        col(dstCol).cast("long").as("dst"),
-        col(weightCol).cast("long").as("__w"))
-      .filter(col("__w") > 0)
-      .groupBy(col("src"), col("dst")).agg(sum(col("__w")).as("__w"))
-    val (e, _) = persistForKey(
-      ew.join(ew.groupBy("src").agg(sum(col("__w")).as("__totw")), "src"), "src")
-    // guard failures must not leak the persisted edge table into the
-    // CacheManager of a shared session (CorpusSpec asserts emptiness)
-    try {
-      val maxWRow = e.agg(max(col("__w"))).first()
-      require(!maxWRow.isNullAt(0), "edge set is empty (or all weights <= 0)")
-      require(scale <= Long.MaxValue / maxWRow.getLong(0),
-        s"scale·maxWeight would overflow: scale=$scale maxW=${maxWRow.getLong(0)}")
-    } catch { case t: Throwable => e.unpersist(); throw t }
-    val nodes = e.select(col("src").as("node"))
-      .unionByName(e.select(col("dst").as("node"))).distinct().persist()
-    // |V| as a driver long (non-zero: the empty case threw above) —
-    // the per-iteration crossJoin(broadcast(count)) re-built a
-    // broadcast exchange per checkpointed segment; same floors
-    val n = nodes.count()
-    val teleport = scale * (dampDen - dampNum) / dampDen
-    val initPr = scale / n
-    val teleBase = teleport / n
-    var pr = nodes.select(col("node"), lit(initPr).as("pr"))
-    var lastCkpt: DataFrame = null
-    for (i <- 1 to iterations) {
-      // zero-row-per-node union instead of the per-iteration rebase
-      // join (the pageRankInt rationale — one hash(dst) exchange)
-      val prH = hintSmall(pr, n)
-      pr = prH.join(e, prH("node") === e("src"))
-        .select(col("dst"), expr("(pr * __w) div __totw").as("__c"))
-        .unionByName(nodes.select(col("node").as("dst"), lit(0L).as("__c")))
-        .groupBy(col("dst")).agg(sum(col("__c")).as("__s"))
-        .select(col("dst").as("node"),
-          (lit(teleBase) +
-            expr(s"(CAST($dampNum AS BIGINT) * __s) div $dampDen"))
-            .cast("long").as("pr"))
-      if (i % 3 == 0 && i < iterations) {
-        pr = pr.localCheckpoint()
-        if (lastCkpt != null) Dedup.CheckpointHygiene.free(lastCkpt)
-        lastCkpt = pr
-      }
-    }
-    val result = pr.localCheckpoint()
-    if (lastCkpt != null) Dedup.CheckpointHygiene.free(lastCkpt)
-    e.unpersist(); nodes.unpersist()
-    result
+    powerIteration(positiveWeights(edges, srcCol, dstCol, weightCol), None,
+      iterations, scale, dampNum, dampDen, checkWeights = true)
   }
 
   /** Personalized PageRank (Haveliwala 2002): the teleport mass
@@ -338,7 +177,7 @@ object Graph {
     * — every division a BIGINT floor (q164 unrolls it). Seeds
     * outside the graph's node set are ignored (they can receive no
     * links and give none); dangling-node mass decays exactly as in
-    * the base operator. Same per-iteration shape and hygiene. */
+    * the base operator. */
   def personalizedPageRankInt(edges: DataFrame, srcCol: String,
       dstCol: String, weightCol: String, seeds: DataFrame,
       iterations: Int, scale: Long = 1000000000000L,
@@ -348,55 +187,88 @@ object Graph {
     require(dampNum > 0 && dampNum < dampDen, s"need 0 < $dampNum < $dampDen")
     require(scale > 0 && scale <= Long.MaxValue / (dampDen * 2),
       s"scale must be in (0, ${Long.MaxValue / (dampDen * 2)}], got $scale")
-    // cached once, hash(src)-keyed above the size threshold (the
-    // pageRankWeightedInt rationale — persistForKey, totw
-    // denormalized onto the edge table at build)
-    val ew = edges
-      .select(col(srcCol).cast("long").as("src"),
-        col(dstCol).cast("long").as("dst"),
-        col(weightCol).cast("long").as("__w"))
-      .filter(col("__w") > 0)
-      .groupBy(col("src"), col("dst")).agg(sum(col("__w")).as("__w"))
-    val (e, eCnt) = persistForKey(
+    powerIteration(positiveWeights(edges, srcCol, dstCol, weightCol),
+      Some(seeds), iterations, scale, dampNum, dampDen, checkWeights = true)
+  }
+
+  /** (src, dst, __w): the positive weights of each distinct edge, summed. */
+  private def positiveWeights(edges: DataFrame, srcCol: String,
+      dstCol: String, weightCol: String): DataFrame = edges
+    .select(col(srcCol).cast("long").as("src"),
+      col(dstCol).cast("long").as("dst"),
+      col(weightCol).cast("long").as("__w"))
+    .filter(col("__w") > 0)
+    .groupBy(col("src"), col("dst")).agg(sum(col("__w")).as("__w"))
+
+  /** The PageRank family's one power iteration, over (src, dst, __w)
+    * edges with distinct (src, dst) and positive weights: rank flows
+    * along each edge in proportion to `w / Σw(src)`, and the teleport
+    * mass returns to the seed nodes (every node when `seeds` is None).
+    * `checkWeights` measures the max weight against `scale` and
+    * rejects an empty edge set; without it an empty edge set gives an
+    * empty result.
+    *
+    * Scale shape: the edge table is built once and persisted, keyed
+    * by src at scale; each iteration is ONE join (rank ⋈ edges on src,
+    * the rank side broadcast when |V| is small) + ONE hash aggregate
+    * on dst — the canonical distributed power-iteration shape. Rank
+    * lineage is materialized every 3 iterations and at the end, each
+    * materialization freeing the previous one. */
+  private def powerIteration(ew: DataFrame, seeds: Option[DataFrame],
+      iterations: Int, scale: Long, dampNum: Long, dampDen: Long,
+      checkWeights: Boolean): DataFrame = {
+    // The per-source weight TOTAL is denormalized onto the edge table
+    // at build: one static self-aggregate join (ReuseExchange collapses
+    // the two reads of ew) replaces `iterations` per-round joins
+    // against the totals (guide §2.4).
+    val (e, _) = persistForKey(
       ew.join(ew.groupBy("src").agg(sum(col("__w")).as("__totw")), "src"), "src")
-    // |V| ≤ 2·|E| — a free upper bound for the per-iteration
-    // broadcast-state hint (hintSmall), conservative past the cap
-    val nV = 2 * eCnt
-    try {
+    // guard failures must not leak the persisted edge table into the
+    // CacheManager of a shared session (CorpusSpec asserts emptiness)
+    if (checkWeights) try {
       val maxWRow = e.agg(max(col("__w"))).first()
       require(!maxWRow.isNullAt(0), "edge set is empty (or all weights <= 0)")
       require(scale <= Long.MaxValue / maxWRow.getLong(0),
         s"scale·maxWeight would overflow: scale=$scale maxW=${maxWRow.getLong(0)}")
     } catch { case t: Throwable => e.unpersist(); throw t }
-    // the seed flag is denormalized onto the persisted NODE table once
-    // (the old shape re-joined seedSet against nodes in EVERY
-    // iteration's rebase — a static join, guide §2.4)
+    // the seed flag is denormalized onto the persisted NODE table once,
+    // never re-joined per iteration (a static join, guide §2.4)
     val nodesRaw = e.select(col("src").as("node"))
       .unionByName(e.select(col("dst").as("node"))).distinct()
-    val seedSet = seeds
-      .select(col(seeds.columns.head).cast("long").as("node")).distinct()
-      .withColumn("__seed", lit(true))
-    val nodes = nodesRaw
-      .join(seedSet, Seq("node"), "left")
-      .select(col("node"), col("__seed")).persist()
-    val nS = nodes.filter(col("__seed").isNotNull).count()
-    if (nS == 0) { // same no-leak rule as the edge guards above
+    val nodes = seeds.fold(nodesRaw.withColumn("__seed", lit(true))) { s =>
+      nodesRaw.join(s.select(col(s.columns.head).cast("long").as("node"))
+          .distinct().withColumn("__seed", lit(true)), Seq("node"), "left")
+    }.persist()
+    // |V| and |S| as driver longs, from one job: literals are free in
+    // every materialized plan segment, where a crossJoin(broadcast) of
+    // a 1-row count re-built a broadcast exchange in each
+    val counts = nodes.agg(count(lit(1)), count(col("__seed"))).first()
+    val (n, nS) = (counts.getLong(0), counts.getLong(1))
+    if (seeds.isDefined && nS == 0) { // same no-leak rule as the edge guards
       e.unpersist(); nodes.unpersist()
       throw new IllegalArgumentException("no seed is a node of the graph")
     }
-    // driver-exact longs (floors of nonnegative quotients)
-    val init = scale / nS
-    val tele = (scale * (dampDen - dampNum) / dampDen) / nS
+    // driver-exact longs (floors of nonnegative quotients — the same
+    // quotients as an in-plan `div`); with no node at all every frame
+    // below is empty whatever they hold
+    val init = if (nS > 0) scale / nS else 0L
+    val tele = if (nS > 0) (scale * (dampDen - dampNum) / dampDen) / nS else 0L
     def seedTerm(base: Long): Column =
       when(col("__seed").isNotNull, lit(base)).otherwise(lit(0L))
+    // `div` (integral division), never `/`: long / long is DOUBLE
+    // division in Spark, and floor(double) drifts from the true
+    // BIGINT quotient once operands outgrow 2^53 — div is exact at
+    // any scale, and it is what the DuckDB oracle's `//` computes
+    val state = new Rolling
     var pr = nodes.select(col("node"), seedTerm(init).as("pr"))
-    var lastCkpt: DataFrame = null
     for (i <- 1 to iterations) {
-      // zero-row-per-node union instead of the per-iteration rebase
-      // join (the pageRankInt rationale): the node arm carries the
-      // per-node teleport constant as a second lane, max over the
-      // group recovers it (each group holds exactly one node row)
-      val prH = hintSmall(pr, nV)
+      // the dangling-node rebase rides the SAME aggregate as the edge
+      // contributions: a zero row per node, carrying the node's
+      // teleport term as a second lane, is unioned into the one
+      // hash(dst) exchange instead of a second nodes ⋈ contrib join.
+      // Absent inbound mass sums to exactly 0, and max over the group
+      // recovers the teleport term (each group holds one node row).
+      val prH = broadcastIfSmall(pr, n)
       pr = prH.join(e, prH("node") === e("src"))
         .select(col("dst"), expr("(pr * __w) div __totw").as("__c"),
           lit(0L).as("__t"))
@@ -408,16 +280,10 @@ object Graph {
           (col("__tm") +
             expr(s"(CAST($dampNum AS BIGINT) * __s) div $dampDen"))
             .cast("long").as("pr"))
-      if (i % 3 == 0 && i < iterations) {
-        pr = pr.localCheckpoint()
-        if (lastCkpt != null) Dedup.CheckpointHygiene.free(lastCkpt)
-        lastCkpt = pr
-      }
+      if (i % 3 == 0 || i == iterations) pr = state.advance(pr)
     }
-    val result = pr.localCheckpoint()
-    if (lastCkpt != null) Dedup.CheckpointHygiene.free(lastCkpt)
     e.unpersist(); nodes.unpersist()
-    result
+    pr
   }
 
   /** Degree assortativity (Newman 2002) — does the graph wire hubs
@@ -504,16 +370,14 @@ object Graph {
     * Shape: per round ONE neighbor join + ONE (node, label) count
     * aggregate + the argmax-by-(count desc, label asc) as
     * min(struct(−count, label)) — the PageRank posture, skinny
-    * rows, localCheckpoint per round (flat lineage). */
+    * rows, the labels materialized per round with fresh attribute ids
+    * (flat lineage; each round frees the one before). */
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
       seeds: DataFrame, idCol: String, labelCol: String,
       rounds: Int = 3): DataFrame = {
     require(rounds >= 1 && rounds <= 20,
       s"rounds must be in [1,20], got $rounds")
-    def truncate(df: DataFrame): DataFrame = {
-      val ck = df.localCheckpoint(eager = true)
-      ck.sparkSession.createDataFrame(ck.rdd, ck.schema)
-    }
+    val state = new Rolling(reroot = true)
     val e = edges.select(col(srcCol).cast("long").as("s"),
         col(dstCol).cast("long").as("t"))
       .filter(col("s") =!= col("t")).distinct()
@@ -524,7 +388,7 @@ object Graph {
         col(labelCol).cast("string").as("__seed"))
       .filter(col("id").isNotNull && col("__seed").isNotNull)
       .groupBy(col("id")).agg(min(col("__seed")).as("__seed"))
-    var labels = truncate(nodes.join(seed, Seq("id"), "left")
+    var labels = state.advance(nodes.join(seed, Seq("id"), "left")
       .select(col("id"), col("__seed").as("label")))
     for (_ <- 1 to rounds) {
       val picks = und
@@ -536,7 +400,7 @@ object Graph {
         .agg(min(struct((-col("__c")).as("nc"), col("__nl").as("l")))
           .as("__best"))
         .select(col("id"), col("__best.l").as("__pick"))
-      labels = truncate(labels
+      labels = state.advance(labels
         .join(seed, Seq("id"), "left")
         .join(picks, Seq("id"), "left")
         .select(col("id"),
@@ -620,8 +484,6 @@ object Graph {
           "mass stays positive (otherwise a normalizer total can hit 0)")
       var hub = nodes.select(col("node"), lit(scale / n).as("hub"))
       var auth: DataFrame = null
-      var lastA: DataFrame = null
-      var lastH: DataFrame = null
       // each half-step references its raw aggregate TWICE (the
       // normalizer total and the rebase join), so an untruncated
       // lineage QUADRUPLES per iteration and Spark re-executes the
@@ -629,27 +491,20 @@ object Graph {
       // 50-edge graph at 2 iterations (r10 bench). Materializing the
       // node-sized score tables every half-step keeps each raw
       // aggregate's subtree one join deep; this is also the standard
-      // power-iteration posture at scale (the [[kCore]] lesson at
-      // the score grain).
-      // each half-step's normalizer total is FUSED into the raw-score
-      // checkpoint via observe (the SCC truncateCounted pattern): the
-      // old broadcast(tot) both ran the raw aggregate's subtree twice
-      // (once for the broadcast job, once in the rebase plan) and paid
-      // a broadcast-exchange job per half-step; the observed sum rides
-      // the one materialization and rebases as a driver literal. A
-      // null observed sum (raw side empty) inlines as a null literal —
-      // `div null` was null before, identical.
-      def ckptSummed(df: DataFrame, sumCol: String): (DataFrame, Option[Long]) = {
-        val obs = org.apache.spark.sql.Observation()
-        val ck = df.observe(obs, sum(col(sumCol)).as("t")).localCheckpoint()
-        val t = Option(obs.get("t")).map(_.asInstanceOf[Long])
-        (ck, t)
-      }
+      // power-iteration posture at scale.
+      // Each half-step's normalizer total is observed inside its
+      // raw-score materialization: a broadcast(tot) both ran the raw
+      // aggregate's subtree twice (once for the broadcast job, once in
+      // the rebase plan) and paid a broadcast-exchange job per
+      // half-step; the observed sum rides the one materialization and
+      // rebases as a driver literal.
+      val rawAs = new Rolling
+      val rawHs = new Rolling
       // the total rebases as an inlined literal; SQL `div` keeps the
       // exact BIGINT quotient (a null total — empty raw side — inlines
       // as CAST(NULL AS BIGINT): `div NULL` was null before, identical)
-      def rebase(t: Option[Long]): String = {
-        val tSql = t.map(_.toString).getOrElse("CAST(NULL AS BIGINT)")
+      def rebase(m: Map[String, Any]): String = {
+        val tSql = Option(m("t")).map(_.toString).getOrElse("CAST(NULL AS BIGINT)")
         s"(CAST($scale AS BIGINT) * coalesce(__s, CAST(0 AS BIGINT))) div $tSql"
       }
       // r18: the per-half-step nodes ⋈ raw rebase join is DEFERRED to
@@ -661,29 +516,25 @@ object Graph {
       // guard keeps every half-step's raw side non-empty, so totals
       // are always defined and the final coalesce-to-0 is exact).
       for (_ <- 1 to iterations) {
-        val hubH = hintSmall(hub, n)
-        val (rawA, totA) = ckptSummed(
+        val hubH = broadcastIfSmall(hub, n)
+        val (rawA, totA) = rawAs.advance(
           hubH.join(e, hubH("node") === e("src"))
-            .groupBy(col("dst")).agg(sum(col("hub")).as("__s")), "__s")
+            .groupBy(col("dst")).agg(sum(col("hub")).as("__s")),
+          Seq(sum(col("__s")).as("t")))
         auth = rawA.select(col("dst").as("node"), expr(rebase(totA)).as("auth"))
-        if (lastA != null) Dedup.CheckpointHygiene.free(lastA)
-        lastA = rawA
-        val authH = hintSmall(auth, n)
-        val (rawH, totH) = ckptSummed(
+        val authH = broadcastIfSmall(auth, n)
+        val (rawH, totH) = rawHs.advance(
           authH.join(e, authH("node") === e("dst"))
-            .groupBy(col("src")).agg(sum(col("auth")).as("__s")), "__s")
+            .groupBy(col("src")).agg(sum(col("auth")).as("__s")),
+          Seq(sum(col("__s")).as("t")))
         hub = rawH.select(col("src").as("node"), expr(rebase(totH)).as("hub"))
-        if (lastH != null) Dedup.CheckpointHygiene.free(lastH)
-        lastH = rawH
       }
-      val result = nodes
+      val result = materialize(nodes
         .join(auth, Seq("node"), "left")
         .join(hub, Seq("node"), "left")
         .select(col("node"), coalesce(col("auth"), lit(0L)).as("auth"),
-          coalesce(col("hub"), lit(0L)).as("hub"))
-        .localCheckpoint()
-      if (lastA != null) Dedup.CheckpointHygiene.free(lastA)
-      if (lastH != null) Dedup.CheckpointHygiene.free(lastH)
+          coalesce(col("hub"), lit(0L)).as("hub")))
+      rawAs.release(); rawHs.release()
       result
     } finally {
       e.unpersist(); nodes.unpersist()
@@ -711,30 +562,27 @@ object Graph {
     * difference), not probabilistically.
     *
     * Shape per round: two aggregates + two joins on node ids, all
-    * skinny (id, id) rows; each round's edge set is checkpointed and
-    * the previous round's blocks freed (the
-    * [[Dedup.connectedComponents]] hygiene). Returns (id, cluster)
-    * for every node mentioned by `pairs`, min-id cluster labels —
-    * the same contract as the min-label operator, so the two are
-    * interchangeable (and spec-pinned equal). */
+    * skinny (id, id) rows; each round's edge set is materialized,
+    * its count observed in the same job, and the previous round's
+    * freed. Returns (id, cluster) for every node mentioned by `pairs`,
+    * min-id cluster labels — the same contract as the min-label
+    * operator, so the two are interchangeable (and spec-pinned equal).
+    * Edge sets of at most `driverCap` distinct edges are solved on the
+    * driver instead (below). */
   def connectedComponentsStar(pairs: DataFrame, idACol: String,
-      idBCol: String, maxRounds: Int = 50): DataFrame = {
-    def truncate(df: DataFrame): DataFrame =
-      if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
-        df.checkpoint(eager = false)
-      else df.localCheckpoint(eager = false)
+      idBCol: String, maxRounds: Int = 50,
+      driverCap: Long = 500000L): DataFrame = {
     val raw = pairs.select(col(idACol).cast("long").as("a"),
       col(idBCol).cast("long").as("b"))
     val nodes = raw.select(col("a").as("id"))
       .unionByName(raw.select(col("b").as("id"))).distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
-    var edges = raw.filter(col("a") =!= col("b"))
+    val (canonical, counted) = materialize(raw.filter(col("a") =!= col("b"))
       .select(greatest(col("a"), col("b")).as("u"),
         least(col("a"), col("b")).as("v"))
-      .distinct()
-    var ckpt = truncate(edges)
-    edges = ckpt
-    var prevCount = edges.count()
+      .distinct(), Seq(count(lit(1)).as("n")))
+    var edges = canonical
+    var prevCount = counted("n").asInstanceOf[Long]
     // Bounded-collect fast path (the upsertComponents pattern, r16):
     // below the loud cap the whole log-round distributed fixpoint —
     // each round two aggregates + two joins + a checkpoint + an
@@ -745,7 +593,6 @@ object Graph {
     // assembly, so only the capped edge set ever reaches the driver.
     // Past the cap the star alternation below runs unchanged (the
     // 100 TB path; GraphSpec pins both paths label-identical).
-    val driverCap = DriverGraph.cap(pairs.sparkSession)
     if (prevCount <= driverCap) {
       // primitive union-find over DENSE int ids (r18: the r17 shape
       // held a boxed HashMap[Long, java.lang.Long] — multi-GB at its
@@ -796,8 +643,8 @@ object Graph {
         .createDataFrame(stars.toSeq).toDF("id", "cluster")
       val labels = nodes.join(broadcast(starDf), Seq("id"), "left")
         .select(col("id"), coalesce(col("cluster"), col("id")).as("cluster"))
-      val result = labels.localCheckpoint()
-      Dedup.CheckpointHygiene.free(ckpt)
+      val result = materialize(labels)
+      CheckpointHygiene.free(edges)
       nodes.unpersist()
       return result
     }
@@ -817,17 +664,16 @@ object Graph {
         .select(col("v").as("u"), col("__m").as("v"))
         .unionByName(smin.select(col("u"), col("__m").as("v")))
         .filter(col("u") =!= col("v")).distinct()
-      val next = truncate(ss)
-      val nextCount = next.count()
+      val (next, nextCounted) = materialize(ss, Seq(count(lit(1)).as("n")))
+      val nextCount = nextCounted("n").asInstanceOf[Long]
       converged = nextCount == prevCount && next.except(edges).isEmpty
-      Dedup.CheckpointHygiene.free(ckpt)
-      ckpt = next
+      CheckpointHygiene.free(edges)
       edges = next
       prevCount = nextCount
       round += 1
     }
     if (!converged) {
-      Dedup.CheckpointHygiene.free(ckpt); nodes.unpersist()
+      CheckpointHygiene.free(edges); nodes.unpersist()
       throw new IllegalStateException(
         s"connectedComponentsStar did not converge within $maxRounds rounds")
     }
@@ -835,8 +681,8 @@ object Graph {
       .join(edges.select(col("u").as("id"), col("v").as("cluster")),
         Seq("id"), "left")
       .select(col("id"), coalesce(col("cluster"), col("id")).as("cluster"))
-    val result = labels.localCheckpoint()
-    Dedup.CheckpointHygiene.free(ckpt)
+    val result = materialize(labels)
+    CheckpointHygiene.free(edges)
     nodes.unpersist()
     result
   }
@@ -1093,38 +939,29 @@ object Graph {
       .select(least(col("__a"), col("__b")).as("u"),
         greatest(col("__a"), col("__b")).as("v"))
       .distinct()
-    // the surviving edge set is MATERIALIZED every round (reliable
-    // checkpoint when a dir is configured, executor-local otherwise —
-    // the connectedComponentsStar policy): each round references it
-    // three times (degrees + both endpoint restrictions), so an
-    // unmaterialized lineage would TRIPLE per round and Catalyst
-    // would re-analyze a 3^rounds-node tree — measured as minutes of
-    // driver-side planning before the first job. Materializing keeps
-    // the plan constant-size and each round's input is the shrunken
-    // edge set, not a recomputation chain.
-    def truncate(df: DataFrame): DataFrame =
-      if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
-        df.checkpoint()
-      else df.localCheckpoint()
-    var sym = truncate(
+    // the surviving edge set is MATERIALIZED every round: each round
+    // references it three times (degrees + both endpoint
+    // restrictions), so an unmaterialized lineage would TRIPLE per
+    // round and Catalyst would re-analyze a 3^rounds-node tree —
+    // measured as minutes of driver-side planning before the first
+    // job. Materializing keeps the plan constant-size and each round's
+    // input is the shrunken edge set, not a recomputation chain.
+    val state = new Rolling
+    var sym = state.advance(
       und.select(col("u").as("x"), col("v").as("y"))
         .unionByName(und.select(col("v").as("x"), col("u").as("y"))))
-    var lastCkpt = sym
     for (_ <- 1 to rounds) {
       val keep = sym.groupBy(col("x"))
         .agg(count(lit(1)).as("__deg"))
         .filter(col("__deg") >= k)
         .select(col("x"))
-      sym = truncate(sym.join(keep, Seq("x"), "left_semi")
+      sym = state.advance(sym.join(keep, Seq("x"), "left_semi")
         .join(keep.select(col("x").as("y")), Seq("y"), "left_semi")
         .select(col("x"), col("y")))
-      Dedup.CheckpointHygiene.free(lastCkpt)
-      lastCkpt = sym
     }
-    val out = sym.groupBy(col("x")).agg(count(lit(1)).as("core_deg"))
-      .select(col("x").as("node"), col("core_deg"))
-    val result = out.localCheckpoint()
-    Dedup.CheckpointHygiene.free(lastCkpt)
+    val result = materialize(sym.groupBy(col("x")).agg(count(lit(1)).as("core_deg"))
+      .select(col("x").as("node"), col("core_deg")))
+    state.release()
     result
   }
 
@@ -1146,18 +983,15 @@ object Graph {
     * round: the [[triangleCounts]] wedge join on the (lo, hi)
     * orientation (each triangle enumerated once), a 3-way explode to
     * per-edge support, one aggregate, one filter — and the edge set
-    * is materialized every round (the [[kCore]] hygiene; the wedge
-    * join reads it three times). Returns the surviving edges with
+    * is materialized every round, freeing the round before (as in
+    * [[kCore]]; the wedge join reads it three times). Returns the
+    * surviving edges with
     * their in-truss support: (lo, hi, support). */
   def kTruss(edges: DataFrame, srcCol: String, dstCol: String,
              k: Int, rounds: Int): DataFrame = {
     require(k >= 2, s"k must be >= 2, got $k")
     require(rounds >= 1 && rounds <= 20,
       s"rounds must be in [1, 20], got $rounds")
-    def truncate(df: DataFrame): DataFrame =
-      if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
-        df.checkpoint()
-      else df.localCheckpoint()
     def support(e: DataFrame): DataFrame = {
       val ab = e.select(col("lo").as("a"), col("hi").as("b"))
       val bc = e.select(col("lo").as("b"), col("hi").as("c"))
@@ -1171,26 +1005,23 @@ object Graph {
         .groupBy(col("lo"), col("hi"))
         .agg(count(lit(1)).as("support"))
     }
-    var e = truncate(edges
+    val state = new Rolling
+    var e = state.advance(edges
       .select(col(srcCol).cast("long").as("__a"),
         col(dstCol).cast("long").as("__b"))
       .filter(col("__a") =!= col("__b"))
       .select(least(col("__a"), col("__b")).as("lo"),
         greatest(col("__a"), col("__b")).as("hi"))
       .distinct())
-    var lastCkpt = e
     for (_ <- 1 to rounds) {
-      e = truncate(e.join(support(e), Seq("lo", "hi"), "left")
+      e = state.advance(e.join(support(e), Seq("lo", "hi"), "left")
         .filter(coalesce(col("support"), lit(0L)) >= k - 2)
         .select(col("lo"), col("hi")))
-      Dedup.CheckpointHygiene.free(lastCkpt)
-      lastCkpt = e
     }
-    val out = e.join(support(e), Seq("lo", "hi"), "left")
+    val result = materialize(e.join(support(e), Seq("lo", "hi"), "left")
       .select(col("lo"), col("hi"),
-        coalesce(col("support"), lit(0L)).as("support"))
-    val result = out.localCheckpoint()
-    Dedup.CheckpointHygiene.free(lastCkpt)
+        coalesce(col("support"), lit(0L)).as("support")))
+    state.release()
     result
   }
 
@@ -1217,8 +1048,9 @@ object Graph {
     * on node id) + two hash aggregates ((node, label) counts, then
     * the argmax via a struct max — max count, then min label). The
     * symmetric edge list is persisted once; label lineage is
-    * checkpointed every 3 rounds ([[pageRankInt]] hygiene). Returns
-    * (node, label) for every node of the simple graph. */
+    * checkpointed every 3 rounds and at the end, each checkpoint
+    * freeing the one before. Returns (node, label) for every node of
+    * the simple graph. */
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
       rounds: Int): DataFrame = {
     require(rounds >= 1 && rounds <= 50,
@@ -1235,7 +1067,7 @@ object Graph {
       .persist(StorageLevel.MEMORY_AND_DISK)
     var labels = sym.select(col("x").as("node")).distinct()
       .select(col("node"), col("node").as("label"))
-    var lastCkpt: DataFrame = null
+    val state = new Rolling
     for (i <- 1 to rounds) {
       val nl = sym
         .join(labels.withColumnRenamed("node", "y"), Seq("y"))
@@ -1247,16 +1079,10 @@ object Graph {
       labels = cnt.groupBy(col("x"))
         .agg(max(struct(col("__c"), (-col("label")).as("__nl"))).as("__m"))
         .select(col("x").as("node"), (-col("__m.__nl")).as("label"))
-      if (i % 3 == 0 && i < rounds) {
-        labels = labels.localCheckpoint()
-        if (lastCkpt != null) Dedup.CheckpointHygiene.free(lastCkpt)
-        lastCkpt = labels
-      }
+      if (i % 3 == 0 || i == rounds) labels = state.advance(labels)
     }
-    val result = labels.localCheckpoint()
-    if (lastCkpt != null) Dedup.CheckpointHygiene.free(lastCkpt)
     sym.unpersist()
-    result
+    labels
   }
 
   /** Per-node triangle counts over the UNDIRECTED simple graph
@@ -1595,10 +1421,11 @@ object Graph {
     * any fixed round count is a defined, replayable semantics —
     * exact once rounds ≥ temporal diameter). Per round: the arrivals
     * (broadcast when 2·|E|, the kernel's bound on their rows, is under
-    * the [[hintSmall]] cap) join the persisted edges on src with
-    * t ≥ arrival, the relaxed arrivals are unioned with the old ones,
-    * and one min-aggregate on node keeps the earliest; the result is
-    * localCheckpoint'd, so lineage stays one round deep. */
+    * [[Dedup.CheckpointHygiene.BroadcastMaxRows]]) join the persisted
+    * edges on src with t ≥ arrival, the relaxed arrivals are unioned
+    * with the old ones, and one min-aggregate on node keeps the
+    * earliest; the result is materialized, freeing the round before,
+    * so lineage stays one round deep. */
   def earliestArrival(edges: DataFrame, srcCol: String, dstCol: String,
       tsCol: String, seeds: DataFrame, seedCol: String, seedTs: Long,
       rounds: Int): DataFrame = {
@@ -1609,18 +1436,17 @@ object Graph {
     val (e, eCnt) = persistForKey(edges.select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst"),
         col(tsCol).cast("long").as("t")), "src")
-    var arr = seeds.select(col(seedCol).cast("long").as("node")).distinct()
-      .withColumn("arrival", lit(seedTs))
-      .localCheckpoint()
+    val state = new Rolling
+    var arr = state.advance(seeds.select(col(seedCol).cast("long").as("node")).distinct()
+      .withColumn("arrival", lit(seedTs)))
     for (_ <- 1 to rounds) {
-      val arrH = hintSmall(arr, 2 * eCnt)
+      val arrH = broadcastIfSmall(arr, 2 * eCnt)
       val relaxed = arrH.join(e, arrH("node") === e("src") &&
           e("t") >= arrH("arrival"))
         .select(e("dst").as("node"), e("t").as("arrival"))
-      arr = arr.unionByName(relaxed)
+      arr = state.advance(arr.unionByName(relaxed)
         .groupBy(col("node"))
-        .agg(min(col("arrival")).as("arrival"))
-        .localCheckpoint()
+        .agg(min(col("arrival")).as("arrival")))
     }
     e.unpersist()
     arr
@@ -1638,12 +1464,13 @@ object Graph {
     * definition (no divergence is possible in finitely many rounds).
     *
     * Per round: the distances (broadcast when 2·|E|, the kernel's
-    * bound on their rows, is under the [[hintSmall]] cap) join the
-    * persisted min-weight edges on src, the relaxed distances are
-    * unioned with the old ones, and one min-aggregate on node keeps
-    * the shortest — skinny (id, dist) rows, localCheckpoint'd every
-    * round. Unreached nodes are absent (callers left-join their node
-    * table; absence ≠ infinity conflation). */
+    * bound on their rows, is under
+    * [[Dedup.CheckpointHygiene.BroadcastMaxRows]]) join the persisted
+    * min-weight edges on src, the relaxed distances are unioned with
+    * the old ones, and one min-aggregate on node keeps the shortest —
+    * skinny (id, dist) rows, materialized every round, freeing the
+    * round before. Unreached nodes are absent (callers left-join their
+    * node table; absence ≠ infinity conflation). */
   def ssspBellmanFord(edges: DataFrame, srcCol: String, dstCol: String,
       weightCol: String, sources: DataFrame, sourceCol: String,
       rounds: Int): DataFrame = {
@@ -1655,17 +1482,16 @@ object Graph {
         col(dstCol).cast("long").as("dst"),
         col(weightCol).cast("long").as("w"))
       .groupBy(col("src"), col("dst")).agg(min(col("w")).as("w")), "src")
-    var dist = sources
+    val state = new Rolling
+    var dist = state.advance(sources
       .select(col(sourceCol).cast("long").as("node")).distinct()
-      .withColumn("dist", lit(0L))
-      .localCheckpoint()
+      .withColumn("dist", lit(0L)))
     for (_ <- 1 to rounds) {
-      val distH = hintSmall(dist, 2 * eCnt)
+      val distH = broadcastIfSmall(dist, 2 * eCnt)
       val relaxed = distH.join(e, distH("node") === e("src"))
         .select(e("dst").as("node"), (distH("dist") + e("w")).as("dist"))
-      dist = dist.unionByName(relaxed)
-        .groupBy(col("node")).agg(min(col("dist")).as("dist"))
-        .localCheckpoint()
+      dist = state.advance(dist.unionByName(relaxed)
+        .groupBy(col("node")).agg(min(col("dist")).as("dist")))
     }
     e.unpersist()
     dist
@@ -1691,39 +1517,34 @@ object Graph {
     * come out as singleton SCCs (their own id).
     *
     * Shape: every step is skinny (id, id)/(id, color) joins and
-    * min-aggregates; per-iteration results are checkpointed and
-    * freed (the [[connectedComponentsStar]] hygiene). Outer rounds
-    * are bounded by the SCC-DAG peel depth, inner fixpoints by graph
-    * diameter — `maxRounds` caps BOTH loops and convergence failure
-    * throws loudly, never returns a partial labeling. */
+    * min-aggregates; each is materialized, and freed once superseded.
+    * The materializations re-root the plan (fresh attribute ids): the
+    * peel/propagate loops re-join frames that all descend from the
+    * same node table, which otherwise trips Spark's ambiguous-self-
+    * join detection after a few rounds. Outer rounds are bounded by
+    * the SCC-DAG peel depth, inner fixpoints by graph diameter —
+    * `maxRounds` caps BOTH loops and convergence failure throws
+    * loudly, never returns a partial labeling. Graphs of at most
+    * `driverCap` distinct edges are solved on the driver instead
+    * (below). */
   def stronglyConnectedComponents(edges: DataFrame, srcCol: String,
-      dstCol: String, maxRounds: Int = 50): DataFrame = {
-    // checkpoint AND re-root the plan (fresh attribute ids): the
-    // peel/propagate loops re-join frames that all descend from the
-    // same node table, which otherwise trips Spark's ambiguous-self-
-    // join detection after a few rounds
-    def truncate(df: DataFrame): DataFrame = {
-      val ck = df.localCheckpoint(eager = true)
-      ck.sparkSession.createDataFrame(ck.rdd, ck.schema)
-    }
-    // node-set checkpoint with the surviving-node count FUSED into the
-    // materialization via observe (the propagate-fingerprint pattern):
-    // the peel loop needs |nodes| every round, and a separate count()
-    // was one whole job per peel round on a fixture where per-round job
-    // overhead dominates (r13 verdict stretch: "one fewer job per round
-    // is the only lever left")
-    def truncateCounted(df: DataFrame): (DataFrame, Long) = {
-      val obs = org.apache.spark.sql.Observation()
-      val ck = df.observe(obs, count(lit(1)).as("n"))
-        .localCheckpoint(eager = true)
-      val re = ck.sparkSession.createDataFrame(ck.rdd, ck.schema)
-      (re, obs.get("n").asInstanceOf[Long])
-    }
+      dstCol: String, maxRounds: Int = 50,
+      driverCap: Long = 500000L): DataFrame = {
+    // the node and edge sets, each with its row count observed in its
+    // materialization: the peel loop needs |nodes| every round, and a
+    // separate count() was one whole job per peel round on a fixture
+    // where per-round job overhead dominates (r13 verdict stretch:
+    // "one fewer job per round is the only lever left")
+    val nodeSets = new Rolling(reroot = true)
+    val edgeSets = new Rolling(reroot = true)
+    def counted(r: (DataFrame, Map[String, Any])): (DataFrame, Long) =
+      (r._1, r._2("n").asInstanceOf[Long])
+    val rowCount = Seq(count(lit(1)).as("n"))
     val raw = edges.select(col(srcCol).cast("long").as("s"),
       col(dstCol).cast("long").as("t")).distinct()
-    var (nodes, remaining) = truncateCounted(raw.select(col("s").as("id"))
-      .unionByName(raw.select(col("t").as("id"))).distinct())
-    var (e, eCount) = truncateCounted(raw.filter(col("s") =!= col("t")))
+    var (nodes, remaining) = counted(nodeSets.advance(raw.select(col("s").as("id"))
+      .unionByName(raw.select(col("t").as("id"))).distinct(), rowCount))
+    var (e, eCount) = counted(edgeSets.advance(raw.filter(col("s") =!= col("t")), rowCount))
     // Bounded-collect fast path (the upsertComponents / ccStar
     // pattern): below the loud cap the whole peel × propagate job
     // cascade — one eager checkpoint per relaxation PAIR, times two
@@ -1735,7 +1556,6 @@ object Graph {
     // singleton SCC). Past the cap the coloring loop below runs
     // unchanged (the 100 TB path; GraphSpec pins both paths
     // label-identical).
-    val driverCap = DriverGraph.cap(edges.sparkSession)
     if (eCount <= driverCap) {
       // primitive iterative Tarjan over DENSE int ids + CSR adjacency
       // (r18: the r17 shape held boxed HashMaps/ArrayBuffers for
@@ -1841,38 +1661,34 @@ object Graph {
         .createDataFrame(sccOf.toSeq).toDF("id", "scc0")
       val out = nodes.join(broadcast(sccDf), Seq("id"), "left")
         .select(col("id"), coalesce(col("scc0"), col("id")).as("scc"))
-      return truncate(out)
+      val result = materialize(out, reroot = true)
+      nodeSets.release(); edgeSets.release()
+      return result
     }
-    var labels: DataFrame = null // accumulated (id, scc)
+    val sccs = mutable.ArrayBuffer.empty[DataFrame] // (id, scc) per peel round
     var round = 0
     // min-label propagation to fixpoint along `ed` (s -> t), seeded
     // with each node's own id; returns (id, color)
     def propagate(ns: DataFrame, ed: DataFrame, out: String): DataFrame = {
       // min-propagation is per-id monotone NON-INCREASING with a
       // constant id set, so the (count, Σcolor) fingerprint is an
-      // exact fixpoint test; the fingerprint is FUSED into the
-      // checkpoint materialization via observe/CollectMetrics (one
-      // job per relaxation pair instead of checkpoint + separate
-      // agg-collect — the r12 cpu_top showed per-round job overhead
-      // dominating the 200-node fixture at only 2.2× parallelism;
-      // observe's accumulator is exactly-once under task retries,
-      // unlike hand-rolled accumulators in a map). Relaxations run
-      // in PAIRS per materialization (the longestPathDag cadence;
-      // deeper batches make each skinny checkpoint proportionally
-      // slower — measured, 2 is the knee). Σ rides DECIMAL(38,0) so
-      // billion-node id sums cannot wrap.
-      def truncateFp(d: DataFrame): (DataFrame, (Long, String)) = {
-        val obs = org.apache.spark.sql.Observation()
-        val ck = d.observe(obs, count(lit(1)).as("n"),
-            coalesce(sum(col(out).cast("decimal(38,0)")),
-              lit(0).cast("decimal(38,0)")).as("s"))
-          .localCheckpoint(eager = true)
-        val re = ck.sparkSession.createDataFrame(ck.rdd, ck.schema)
-        val m = obs.get
-        (re, (m("n").asInstanceOf[Long], String.valueOf(m("s"))))
-      }
+      // exact fixpoint test; the fingerprint is observed inside the
+      // materialization (one job per relaxation pair instead of a
+      // checkpoint + separate agg-collect — the r12 cpu_top showed
+      // per-round job overhead dominating the 200-node fixture at
+      // only 2.2× parallelism; observe's accumulator is exactly-once
+      // under task retries, unlike hand-rolled accumulators in a
+      // map). Relaxations run in PAIRS per materialization (the
+      // longestPathDag cadence; deeper batches make each skinny
+      // checkpoint proportionally slower — measured, 2 is the knee).
+      // Σ rides DECIMAL(38,0) so billion-node id sums cannot wrap.
+      val colors = new Rolling(reroot = true)
+      val fingerprint = Seq(count(lit(1)).as("n"),
+        coalesce(sum(col(out).cast("decimal(38,0)")),
+          lit(0).cast("decimal(38,0)")).as("s"))
       val edr = ed.select(col("s").as("__es"), col("t").as("__et"))
-      var (colr, last) = truncateFp(ns.select(col("id"), col("id").as(out)))
+      var (colr, last) = colors.advance(ns.select(col("id"), col("id").as(out)),
+        fingerprint)
       var stable = false
       var it = 0
       while (!stable && it <= maxRounds) {
@@ -1884,7 +1700,7 @@ object Graph {
           c = c.unionByName(pushed)
             .groupBy(col("id")).agg(min(col(out)).as(out))
         }
-        val (next, nf) = truncateFp(c)
+        val (next, nf) = colors.advance(c, fingerprint)
         stable = nf == last
         last = nf
         colr = next
@@ -1904,33 +1720,39 @@ object Graph {
       //    contradict color minimality) landing ON the root id.
       val color = propagate(nodes, e, "color")
       // materialized ONCE per peel round: propagate re-reads its edge
-      // frame every relaxation pair, and an un-truncated sameColorRev
-      // re-ran these two joins inside every one of those plans
-      val sameColorRev = truncate(e
+      // frame every relaxation pair, and an un-materialized
+      // sameColorRev re-ran these two joins inside every one of those
+      // plans
+      val sameColorRev = materialize(e
         .join(color.select(col("id").as("s"), col("color").as("__cs")), "s")
         .join(color.select(col("id").as("t"), col("color").as("__ct")), "t")
         .filter(col("__cs") === col("__ct"))
-        .select(col("t").as("s"), col("s").as("t")))
+        .select(col("t").as("s"), col("s").as("t")), reroot = true)
       val back = propagate(nodes, sameColorRev, "bcolor")
-      val scc = truncate(color.join(back, Seq("id"))
+      val scc = materialize(color.join(back, Seq("id"))
         .filter(col("color") === col("bcolor"))
-        .select(col("id"), col("color").as("scc")))
-      labels = if (labels == null) scc else labels.unionByName(scc)
+        .select(col("id"), col("color").as("scc")), reroot = true)
+      Seq(color, sameColorRev, back).foreach(CheckpointHygiene.free)
+      sccs += scc
       // 2. peel: drop labeled nodes and any edge touching them
       val labeledIds = scc.select(col("id"))
-      val (nodesNext, remNext) =
-        truncateCounted(nodes.join(labeledIds, Seq("id"), "left_anti"))
+      val (nodesNext, remNext) = counted(nodeSets.advance(
+        nodes.join(labeledIds, Seq("id"), "left_anti"), rowCount))
       nodes = nodesNext
       remaining = remNext
-      e = truncate(e
+      e = edgeSets.advance(e
         .join(labeledIds.select(col("id").as("s")), Seq("s"), "left_anti")
         .join(labeledIds.select(col("id").as("t")), Seq("t"), "left_anti")
         .select(col("s"), col("t")))
       round += 1
     }
-    if (labels == null) raw.sparkSession.emptyDataFrame
-      .withColumn("id", lit(0L)).withColumn("scc", lit(0L)).limit(0)
-    else truncate(labels)
+    val result =
+      if (sccs.isEmpty) raw.sparkSession.emptyDataFrame
+        .withColumn("id", lit(0L)).withColumn("scc", lit(0L)).limit(0)
+      else materialize(sccs.reduce(_ unionByName _), reroot = true)
+    sccs.foreach(CheckpointHygiene.free)
+    nodeSets.release(); edgeSets.release()
+    result
   }
 
   /** DBSCAN (Ester et al. 1996) on the plane, EXACT and fully
@@ -2221,7 +2043,7 @@ object Graph {
         coalesce(col("__l"), concat(lit("__node_"), col("__n")))
           .as("__c"))
     // |E| observe-fused into the community aggregate's materialization
-    // (the SCC truncateCounted pattern). The old shape re-ran the
+    // (as Dedup.CheckpointHygiene.materialize observes). The old shape re-ran the
     // edge-tagging joins in FOUR subtrees (internal, the two union
     // arms of vol, and the modularity arm's recompute of comm): the
     // endpoint grain computes volume AND internal in one aggregate —
@@ -2296,23 +2118,21 @@ object Graph {
         col(dstCol).cast("long").as("dst"),
         col(weightCol).cast("long").as("w"))
       .groupBy(col("src"), col("dst")).agg(max(col("w")).as("w")), "src")
-    var dist = e.select(col("src").as("node")).distinct()
+    // the (count, Σdist) fingerprint is observed inside each
+    // materialization, so a relaxation pair runs no separate action
+    val state = new Rolling
+    val fingerprint = Seq(count(lit(1)).as("n"),
+      coalesce(sum(col("dist")), lit(0L)).as("s"))
+    var (dist, last) = state.advance(e.select(col("src").as("node")).distinct()
       .join(e.select(col("dst").as("node")).distinct(), Seq("node"),
         "left_anti")
-      .withColumn("dist", lit(0L))
-      .localCheckpoint()
-    def fp(d: DataFrame): (Long, Long) = {
-      val r = d.agg(count(lit(1)), coalesce(sum(col("dist")), lit(0L)))
-        .collect()(0)
-      (r.getLong(0), r.getLong(1))
-    }
-    var last = fp(dist)
+      .withColumn("dist", lit(0L)), fingerprint)
     var rounds = 0
     var converged = false
-    // relax TWICE per checkpoint/fingerprint — the fixpoint test and
-    // the materialization are the per-round actions, so pairing
-    // relaxations halves them; overshooting a converged frontier by
-    // one no-op relaxation is free (max-relaxation is idempotent)
+    // relax TWICE per materialization — it is the per-round action,
+    // so pairing relaxations halves them; overshooting a converged
+    // frontier by one no-op relaxation is free (max-relaxation is
+    // idempotent)
     while (!converged) {
       require(rounds < maxRounds,
         s"no fixpoint after $maxRounds rounds — cycle or deeper DAG")
@@ -2327,8 +2147,7 @@ object Graph {
         d = d.unionByName(relaxed)
           .groupBy(col("node")).agg(max(col("dist")).as("dist"))
       }
-      val next = d.localCheckpoint()
-      val nf = fp(next)
+      val (next, nf) = state.advance(d, fingerprint)
       converged = nf == last
       last = nf
       dist = next

@@ -2046,7 +2046,7 @@ object Learn {
       .select(floor(col(valueCol).cast("double") * 1000).cast("long").as("__v"))
     // run-grain and checkpointed: the two spines and the derived
     // deviation runs all read it; N is observe-fused into the one
-    // materialization (the SCC truncateCounted pattern) and rebases
+    // materialization (as Dedup.CheckpointHygiene.materialize observes) and rebases
     // every rank/trim cut as a literal — the old broadcast(scal) arms
     // re-ran the runs aggregate per consumer
     val obsN = org.apache.spark.sql.Observation()
@@ -3890,7 +3890,7 @@ object Learn {
     // checkpoint each broadcast arm (scal, med, above, final) re-ran
     // the row-scale exchange from scratch (the q435 plan carried 124
     // Exchanges for one row of output). N is observe-fused into the
-    // materialization (the SCC truncateCounted pattern) and rebases
+    // materialization (as Dedup.CheckpointHygiene.materialize observes) and rebases
     // as a literal; integer div semantics unchanged — Column./ is
     // DOUBLE division and would shift the cut to ceil(N/2)+1 on even N.
     val obsN = org.apache.spark.sql.Observation()
@@ -4285,7 +4285,7 @@ object Learn {
         .groupBy(col("item"))
         .agg(sum(col("__t")).cast("decimal(38,0)").as("__d"))
       // the normalizer total is FUSED into the round's checkpoint via
-      // observe (the SCC truncateCounted pattern): the old
+      // observe (as Dedup.CheckpointHygiene.materialize observes): the old
       // crossJoin(broadcast(tot)) ran `updated`'s subtree twice (once
       // for the broadcast job, once in the checkpointed plan) and paid
       // a broadcast exchange per round; the observed sum rebases as an

@@ -706,6 +706,23 @@ class PlanSpec extends AnyFunSuite with SparkTestBase {
     assert(j(1) <= 2, s"bfsLevels(1 round) job census grew: ${j(1)}")
   }
 
+  test("longestPathDag census: each extra relaxation pair costs the same jobs, its fingerprint observed in the materialization") {
+    import org.apache.spark.sql.functions._
+    // a chain of length L settles after L relaxations, and one more
+    // pair finds the fingerprint stable: L = 2, 4, 6 run 2, 3, 4 pairs
+    def jobs(length: Int): Int = {
+      val edges = spark.range(length)
+        .select(col("id").as("s"), (col("id") + 1).as("t"), lit(3L).as("w"))
+      jobCensus(operators.Graph.longestPathDag(edges, "s", "t", "w")
+        .collect(): Unit)._1
+    }
+    val j = Seq(2, 4, 6).map(l => l -> jobs(l)).toMap
+    assert(j(6) - j(4) == j(4) - j(2), s"relaxation pairs differ in cost: $j")
+    // measured when this was pinned: 7 jobs per pair, where a separate
+    // fingerprint collect cost 2 more (its partial and final stages)
+    assert(j(4) - j(2) == 7, s"longestPathDag per-pair job census moved: $j")
+  }
+
   test("robotsDecide: rules join is an equi join on host — no cartesian fallback") {
     import spark.implicits._
     import graft.operators.Web
@@ -1194,9 +1211,10 @@ class PlanSpec extends AnyFunSuite with SparkTestBase {
       } finally spark.listenerManager.unregister(l)
     }
     import spark.implicits._
-    def run(): Unit = {
+    def run(driverCap: Long = 500000L): Unit = {
       val tiny = Seq((1L, 2L), (2L, 1L), (2L, 3L)).toDF("s", "t")
-      val out = operators.Graph.stronglyConnectedComponents(tiny, "s", "t")
+      val out = operators.Graph.stronglyConnectedComponents(tiny, "s", "t",
+          driverCap = driverCap)
         .collect()
       assert(out.map(r => r.getLong(0) -> r.getLong(1)).toMap ==
         Map(1L -> 1L, 2L -> 1L, 3L -> 3L))
@@ -1207,14 +1225,11 @@ class PlanSpec extends AnyFunSuite with SparkTestBase {
     assert(fast.getOrElse("collect", 0) == 2, s"stray collects: $fast")
     assert(fast.getOrElse("localCheckpoint", 0) == 3,
       s"driver-path materialization census moved: $fast")
-    spark.conf.set("spark.graft.driverGraph.maxEdges", "0")
-    try {
-      val dist = census(run())
-      assert(dist.getOrElse("count", 0) == 0, s"standalone counts: $dist")
-      assert(dist.getOrElse("collect", 0) == 1, s"stray collects: $dist")
-      assert(dist.getOrElse("localCheckpoint", 0) == 21,
-        s"distributed-path materialization census moved: $dist")
-    } finally spark.conf.unset("spark.graft.driverGraph.maxEdges")
+    val dist = census(run(driverCap = 0))
+    assert(dist.getOrElse("count", 0) == 0, s"standalone counts: $dist")
+    assert(dist.getOrElse("collect", 0) == 1, s"stray collects: $dist")
+    assert(dist.getOrElse("localCheckpoint", 0) == 21,
+      s"distributed-path materialization census moved: $dist")
   }
 
   test("global lint: every partition-less logical Window reachable from SparkEntry.queries is allowlisted bounded-grain (r15)") {
@@ -1348,7 +1363,8 @@ class PlanSpec extends AnyFunSuite with SparkTestBase {
     // grain). Measured r18 shape on a sub-threshold graph: edge build
     // (distinct + degree self-join) + node distinct + one hash(dst)
     // aggregate exchange per iteration with the state side BROADCAST
-    // (hintSmall) — the r17 shape spent 3 joins + 1 agg per iteration.
+    // (broadcastIfSmall) — the r17 shape spent 3 joins + 1 agg per
+    // iteration.
     val total = new java.util.concurrent.atomic.AtomicInteger()
     val l = new org.apache.spark.sql.util.QueryExecutionListener {
       def onSuccess(f: String,

@@ -875,10 +875,6 @@ class GraphSpec extends SparkTestBase {
 
   test("r17 bounded-collect fast paths: SCC and ccStar label-identical to the forced distributed paths, cap crossing included") {
     import spark.implicits._
-    def withCap[T](cap: String)(f: => T): T = {
-      spark.conf.set("spark.graft.driverGraph.maxEdges", cap)
-      try f finally spark.conf.unset("spark.graft.driverGraph.maxEdges")
-    }
     // SCC: cycles, nested peels, tails, a long cycle, isolated via
     // self-loop only — a shape with multi-round peel depth
     val scc = (Seq((1L, 2L), (2L, 3L), (3L, 1L), (4L, 1L), (5L, 6L),
@@ -889,25 +885,89 @@ class GraphSpec extends SparkTestBase {
     def labs(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
       df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val sccFast = labs(Graph.stronglyConnectedComponents(scc, "s", "t"))
-    val sccDist = withCap("0")(
-      labs(Graph.stronglyConnectedComponents(scc, "s", "t")))
+    val sccDist = labs(Graph.stronglyConnectedComponents(scc, "s", "t",
+      driverCap = 0))
     assert(sccFast == sccDist, s"fast=$sccFast dist=$sccDist")
     assert(sccFast(29L) == 20L && sccFast(40L) == 40L)
     // ccStar: chain + merged pair + isolated self-pair
     val cc = ((0L until 50L).map(i => (i, i + 1)) ++
       Seq((100L, 101L), (101L, 102L), (200L, 200L))).toDF("a", "b")
     val ccFast = labs(Graph.connectedComponentsStar(cc, "a", "b"))
-    val ccDist = withCap("0")(
-      labs(Graph.connectedComponentsStar(cc, "a", "b")))
+    val ccDist = labs(Graph.connectedComponentsStar(cc, "a", "b",
+      driverCap = 0))
     assert(ccFast == ccDist, s"fast=$ccFast dist=$ccDist")
     assert(ccFast(50L) == 0L && ccFast(102L) == 100L && ccFast(200L) == 200L)
     // cap crossing: a cap of exactly |E| takes the driver path, one
     // below forces distributed — both identical (the loud boundary
     // behaves, no off-by-one double-path divergence)
-    val atCap = withCap("13")(labs(Graph.stronglyConnectedComponents(
-      scc.filter(col("s") < 20), "s", "t")))
-    val below = withCap("11")(labs(Graph.stronglyConnectedComponents(
-      scc.filter(col("s") < 20), "s", "t")))
+    val atCap = labs(Graph.stronglyConnectedComponents(
+      scc.filter(col("s") < 20), "s", "t", driverCap = 13))
+    val below = labs(Graph.stronglyConnectedComponents(
+      scc.filter(col("s") < 20), "s", "t", driverCap = 11))
     assert(atCap == below, s"cap boundary diverged: $atCap vs $below")
+  }
+
+  test("pageRankInt: an empty edge set gives an empty (node, pr) frame") {
+    val pr = Graph.pageRankInt(Seq.empty[(Long, Long)].toDF("s", "t"), "s", "t",
+      iterations = 4)
+    assert(pr.columns.toSeq == Seq("node", "pr"))
+    assert(pr.schema.fields.forall(_.dataType == org.apache.spark.sql.types.LongType))
+    assert(pr.collect().isEmpty)
+  }
+
+  test("personalizedPageRankInt over distinct unit-weight edges with every node a seed equals pageRankInt") {
+    val rnd = new scala.util.Random(7)
+    for (g <- 0 until 8) {
+      // duplicates and self-loops included: pageRankInt reads the
+      // distinct (src, dst) pairs, so the unit-weight side does too
+      val nodes = 3 + rnd.nextInt(25)
+      val raw = Seq.fill(1 + rnd.nextInt(3 * nodes))(
+        (rnd.nextInt(nodes).toLong - 5, rnd.nextInt(nodes).toLong - 5))
+      val edges = raw.toDF("s", "t")
+      val unit = raw.distinct.map { case (a, b) => (a, b, 1L) }.toDF("s", "t", "w")
+      val seeds = raw.flatMap { case (a, b) => Seq(a, b) }.distinct.toDF("n")
+      val iterations = 1 + rnd.nextInt(7)
+      val scale = if (g % 2 == 0) 1000000000000L else 1000L + rnd.nextInt(100000)
+      def rows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] =
+        df.collect().map(r => r.getLong(0) -> r.getLong(1)).toSeq.sorted
+      val base = rows(Graph.pageRankInt(edges, "s", "t", iterations, scale))
+      val ppr = rows(Graph.personalizedPageRankInt(unit, "s", "t", "w", seeds,
+        iterations, scale))
+      assert(base.nonEmpty && base == ppr,
+        s"graph $g ($iterations iterations, scale $scale): $base vs $ppr")
+    }
+  }
+
+  test("checkpoint hygiene: the iterative kernels leave only their result's own blocks pinned") {
+    import org.apache.spark.rdd.RDD
+    val sc = spark.sparkContext
+    // every RDD the frame's plan reads, down its whole lineage
+    def lineage(df: org.apache.spark.sql.DataFrame): Set[Int] = {
+      def walk(r: RDD[_]): Set[Int] =
+        r.dependencies.map(d => walk(d.rdd)).foldLeft(Set(r.id))(_ ++ _)
+      df.queryExecution.analyzed.collect {
+        case l: org.apache.spark.sql.execution.LogicalRDD => walk(l.rdd)
+      }.flatten.toSet
+    }
+    // measured right after the call: a driver GC can only hide a leak
+    def check(name: String)(call: => org.apache.spark.sql.DataFrame): Unit = {
+      val before = sc.getPersistentRDDs.keySet
+      val out = call
+      val pinned = sc.getPersistentRDDs.keySet -- before
+      assert(pinned.size <= 1 && pinned.subsetOf(lineage(out)),
+        s"$name left ${pinned.size} pinned RDDs beyond its result's own: $pinned")
+      assert(out.collect().nonEmpty, s"$name result no longer reads")
+    }
+    val chain = (0L until 6L).map(i => (i, i + 1, i + 1)).toDF("s", "t", "w")
+    val seeds = Seq(0L).toDF("n")
+    check("earliestArrival")(Graph.earliestArrival(chain, "s", "t", "w",
+      seeds, "n", seedTs = 0L, rounds = 6))
+    check("ssspBellmanFord")(Graph.ssspBellmanFord(chain, "s", "t", "w",
+      seeds, "n", rounds = 6))
+    check("longestPathDag")(Graph.longestPathDag(chain, "s", "t", "w"))
+    val cycles = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 5L),
+      (5L, 4L), (5L, 6L)).toDF("s", "t")
+    check("stronglyConnectedComponents")(Graph.stronglyConnectedComponents(
+      cycles, "s", "t", driverCap = 0))
   }
 }
