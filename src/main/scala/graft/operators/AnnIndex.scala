@@ -191,17 +191,12 @@ object AnnIndex {
           .join(ts, Seq("neighbor_id"), "left_anti")
           // read-what-you-overwrite: materialize before rewriting
           .localCheckpoint()
-        // force dynamic overwrite regardless of session config — static
-        // mode would silently DROP every non-victim partition
-        val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try
-          next.write.mode(SaveMode.Overwrite).partitionBy("list")
-            .parquet(s"$path/codes")
-        finally prev match {
-          case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-          case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-        }
+        // force dynamic overwrite for this write only, whatever the
+        // session says — static mode would silently DROP every
+        // non-victim partition, and the session conf is shared
+        next.write.mode(SaveMode.Overwrite).partitionBy("list")
+          .option("partitionOverwriteMode", "dynamic")
+          .parquet(s"$path/codes")
         val surviving = next.select(col("list")).distinct()
           .collect().map(_.get(0)).toSet
         victims.filterNot(surviving).foreach { v =>

@@ -12,13 +12,9 @@ object Kpis {
     * aggregate with map-side partial aggregation. */
   def countByNormalized(df: DataFrame, c: String,
                         outKey: String = "key", outCount: String = "n"): DataFrame =
-    df.groupBy(lower(coalesce(col(c), lit("unknown"))).as(outKey))
-      .agg(count(lit(1)).as(outCount))
+    df.groupBy(normalized(c).as(outKey)).agg(count(lit(1)).as(outCount))
 
-  /** Aggregate a (key, n) count table into the reference's sorted
-    * string→long map shape (/root/reference/kpis.json:5-12). */
-  private def asMap(keyCol: String, nCol: String): Column =
-    map_from_entries(array_sort(collect_list(struct(col(keyCol), col(nCol)))))
+  private def normalized(c: String): Column = lower(coalesce(col(c), lit("unknown")))
 
   /** Export a string→long count map as a key-sorted array of (key, n)
     * structs — the hashable cross-engine projection of the map shape:
@@ -41,24 +37,43 @@ object Kpis {
       ",")
 
   /** Full KPI record (/root/reference/final_kpis.py:48-55): one row —
-    * totals + two sentiment-count maps + generation timestamp. Each
-    * input is reduced to a single row independently (hash aggregate →
-    * scalar), then the two scalars are cross-joined; nothing here
-    * grows with data volume. `generatedAtUtc` is caller-supplied so
+    * totals + two sentiment-count maps + generation timestamp.
+    *
+    * Plan shape: both inputs are projected to (side, key) with a
+    * boolean side flag (true = videos) and unioned; ONE hash aggregate
+    * counts (side, key) with map-side partial aggregation, and ONE
+    * global aggregate folds those counts into the record: per side,
+    * `sum(n)` over that side's rows and a key-sorted string→long map
+    * built from `collect_list` of that side's (key, n) structs (the
+    * other side's rows are nulls, which `collect_list` skips). Two
+    * exchanges and no join, so a record costs two shuffle-map jobs
+    * whatever the data volume, and nothing here grows with it.
+    *
+    * Semantics are the reference's `count_sent` per input: the key is
+    * `lower(coalesce(col, 'unknown'))` ([[countByNormalized]]). A
+    * global aggregate always returns one row, so an empty input gives
+    * a null total and an empty map for its side, and two empty inputs
+    * still give one record. `generatedAtUtc` is caller-supplied so
     * outputs stay deterministic (SURVEY.md §7.4 non-determinism ban). */
   def kpiRecord(videos: DataFrame, comments: DataFrame,
                 videoSentCol: String, commentSentCol: String,
                 ingestDate: String, generatedAtUtc: String): DataFrame = {
-    val v = countByNormalized(videos, videoSentCol).agg(
-      sum(col("n")).as("total_videos"),
-      asMap("key", "n").as("video_sentiment_counts"))
-    val c = countByNormalized(comments, commentSentCol).agg(
-      sum(col("n")).as("total_comments"),
-      asMap("key", "n").as("comment_sentiment_counts"))
-    v.crossJoin(c).select(
+    def tagged(df: DataFrame, c: String, isVideo: Boolean): DataFrame =
+      df.select(lit(isVideo).as("side"), normalized(c).as("key"))
+    val counts = tagged(videos, videoSentCol, isVideo = true)
+      .unionByName(tagged(comments, commentSentCol, isVideo = false))
+      .groupBy(col("side"), col("key")).agg(count(lit(1)).as("n"))
+    def onSide(isVideo: Boolean, e: Column): Column =
+      when(col("side") === lit(isVideo), e)
+    def total(isVideo: Boolean): Column = sum(onSide(isVideo, col("n")))
+    def counted(isVideo: Boolean): Column = map_from_entries(array_sort(
+      collect_list(onSide(isVideo, struct(col("key"), col("n"))))))
+    counts.agg(
       lit(ingestDate).as("ingest_date"),
-      col("total_videos"), col("total_comments"),
-      col("video_sentiment_counts"), col("comment_sentiment_counts"),
+      total(isVideo = true).as("total_videos"),
+      total(isVideo = false).as("total_comments"),
+      counted(isVideo = true).as("video_sentiment_counts"),
+      counted(isVideo = false).as("comment_sentiment_counts"),
       lit(generatedAtUtc).as("generated_at_utc"))
   }
 }

@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions.{count, lit}
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** Manifest-based SNAPSHOT layer over plain parquet — the minimal
   * time-travel/rollback half of a 100 TB lakehouse, the public
@@ -27,8 +28,31 @@ import org.apache.spark.sql.functions.{count, lit}
   * concurrent commit to the same version fails the rename LOUDLY
   * instead of corrupting history. Readers resolve "latest" by
   * listing the manifest dir (no mutable pointer file to torn-write).
-  * Manifests are line-oriented `key=value` text — driver-parseable
-  * with no JSON dependency, ~bytes per file, |files| lines.
+  * Manifests are line-oriented `key=value` text, driver-parseable,
+  * one line per file:
+  *
+  * {{{
+  * version=3
+  * operation=append          (overwrite | append | rollback)
+  * batch_id=7                (commitBatch only)
+  * schema={"type":"struct",...}   (Spark's StructType JSON, one line)
+  * file=v00001-00000.parquet
+  * file=v00003-00000.parquet
+  * }}}
+  *
+  * The `schema=` line is the read schema: the staged frame's schema
+  * with every field, array element and map value made nullable, which
+  * is what a parquet read of those files returns. [[readSnapshot]]
+  * reads with it and so runs no schema-inference job. It fails safe:
+  *
+  *   - an overwrite writes the line;
+  *   - an append keeps it only when the previous manifest carries a
+  *     schema EQUAL to the new frame's (types, nullability, metadata);
+  *     otherwise the new manifest has no schema line;
+  *   - a rollback copies the line of the version it restores (or
+  *     its absence);
+  *   - a manifest without the line (any table written before it
+  *     existed) is read by parquet schema inference, as it always was.
   *
   * Scale: all driver-side work is O(|files in snapshot|) listings —
   * the data plane is untouched Spark parquet I/O; at 100 TB the
@@ -62,29 +86,50 @@ object Snapshots {
     if (vs.isEmpty) None else Some(vs.max)
   }
 
-  private def readManifest(fs: FileSystem, root: String,
-      v: Int): (String, Seq[String]) = {
+  /** One parsed manifest: its operation, its file list, the
+    * micro-batch id of a [[commitBatch]], and the read schema when the
+    * manifest carries one. */
+  private case class Manifest(operation: String, files: Seq[String],
+      batchId: Option[Long], schema: Option[StructType])
+
+  /** The one manifest parser; None when version `v` has no manifest. */
+  private def parseManifest(fs: FileSystem, root: String,
+      v: Int): Option[Manifest] = {
     val p = manifestPath(root, v)
-    require(fs.exists(p), s"snapshot v$v does not exist under $root")
-    val in = fs.open(p)
-    val text = try {
-      val bos = new java.io.ByteArrayOutputStream()
-      org.apache.hadoop.io.IOUtils.copyBytes(in, bos, 65536, false)
-      new String(bos.toByteArray, "UTF-8")
-    } finally in.close()
-    val lines = text.split("\n").toSeq.filter(_.nonEmpty)
-    val op = lines.collectFirst { case l if l.startsWith("operation=") =>
-      l.stripPrefix("operation=") }.getOrElse("unknown")
-    (op, lines.filter(_.startsWith("file=")).map(_.stripPrefix("file=")))
+    if (!fs.exists(p)) None
+    else {
+      val in = fs.open(p)
+      val text = try {
+        val bos = new java.io.ByteArrayOutputStream()
+        org.apache.hadoop.io.IOUtils.copyBytes(in, bos, 65536, false)
+        new String(bos.toByteArray, "UTF-8")
+      } finally in.close()
+      val lines = text.split("\n").toSeq.filter(_.nonEmpty)
+      def value(key: String): Option[String] =
+        lines.collectFirst { case l if l.startsWith(key + "=") =>
+          l.stripPrefix(key + "=") }
+      Some(Manifest(
+        value("operation").getOrElse("unknown"),
+        lines.filter(_.startsWith("file=")).map(_.stripPrefix("file=")),
+        value("batch_id").map(_.toLong),
+        value("schema").map(DataType.fromJson(_).asInstanceOf[StructType])))
+    }
+  }
+
+  private def readManifest(fs: FileSystem, root: String, v: Int): Manifest = {
+    val m = parseManifest(fs, root, v)
+    require(m.nonEmpty, s"snapshot v$v does not exist under $root")
+    m.get
   }
 
   private[sources] def writeManifest(fs: FileSystem, root: String, v: Int,
       op: String, files: Seq[String],
-      batchId: Option[Long] = None): Unit = {
+      batchId: Option[Long] = None, schema: Option[StructType] = None): Unit = {
     val tmp = new Path(root, f"$ManifestDir/.v$v%05d.tmp")
     val out = fs.create(tmp, true)
     try out.write((s"version=$v\noperation=$op\n" +
       batchId.map(b => s"batch_id=$b\n").getOrElse("") +
+      schema.map(t => s"schema=${t.json}\n").getOrElse("") +
       files.map("file=" + _).mkString("\n") + "\n").getBytes("UTF-8"))
     finally out.close()
     val dest = manifestPath(root, v)
@@ -93,6 +138,19 @@ object Snapshots {
       throw new IllegalStateException(
         s"concurrent commit detected: snapshot v$v already exists under $root")
     }
+  }
+
+  /** `t` as a parquet read returns it: every field, array element and
+    * map value nullable, at every depth (a map key itself can never be
+    * null, but the fields nested in it become nullable too). Names,
+    * types and column metadata are kept. */
+  private def asRead(t: DataType): DataType = t match {
+    case s: StructType =>
+      StructType(s.fields.map(f => f.copy(dataType = asRead(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(asRead(a.elementType), containsNull = true)
+    case m: MapType =>
+      MapType(asRead(m.keyType), asRead(m.valueType), valueContainsNull = true)
+    case other => other
   }
 
   /** Write `df`'s files into `data/` under version-prefixed names and
@@ -133,12 +191,15 @@ object Snapshots {
     val fs = fsOf(df.sparkSession, root)
     val prev = versions(fs, root)
     val next = if (prev.isEmpty) 1 else prev.max + 1
+    val schema = asRead(df.schema).asInstanceOf[StructType]
     stage(df, root, next).map { fresh =>
-      val files =
-        if (overwrite || prev.isEmpty) fresh
-        else readManifest(fs, root, prev.max)._2 ++ fresh
-      writeManifest(fs, root, next,
-        if (overwrite || prev.isEmpty) "overwrite" else "append", files, batchId)
+      if (overwrite || prev.isEmpty)
+        writeManifest(fs, root, next, "overwrite", fresh, batchId, Some(schema))
+      else {
+        val last = readManifest(fs, root, prev.max)
+        writeManifest(fs, root, next, "append", last.files ++ fresh, batchId,
+          last.schema.filter(_ == schema))
+      }
       next
     }
   }
@@ -170,27 +231,9 @@ object Snapshots {
       overwrite: Boolean = false): Option[Int] = {
     val fs = fsOf(df.sparkSession, root)
     val already = versions(fs, root).exists { v =>
-      batchIdOf(fs, root, v).contains(batchId)
+      parseManifest(fs, root, v).exists(_.batchId.contains(batchId))
     }
     if (already) None else publish(df, root, overwrite, Some(batchId))
-  }
-
-  private def batchIdOf(fs: FileSystem, root: String,
-      v: Int): Option[Long] = {
-    val p = manifestPath(root, v)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val text = try {
-        val bos = new java.io.ByteArrayOutputStream()
-        org.apache.hadoop.io.IOUtils.copyBytes(in, bos, 65536, false)
-        new String(bos.toByteArray, "UTF-8")
-      } finally in.close()
-      text.split("\n").collectFirst {
-        case l if l.startsWith("batch_id=") =>
-          l.stripPrefix("batch_id=").toLong
-      }
-    }
   }
 
   /** Read snapshot `version` (latest when negative) — exactly the
@@ -203,18 +246,19 @@ object Snapshots {
       require(vs.nonEmpty, s"no snapshots under $root")
       vs.max
     }
-    val (_, files) = readManifest(fs, root, v)
-    require(files.nonEmpty, s"snapshot v$v lists no files")
-    spark.read.parquet(files.map(f => s"$root/$DataDir/$f"): _*)
+    val m = readManifest(fs, root, v)
+    require(m.files.nonEmpty, s"snapshot v$v lists no files")
+    val paths = m.files.map(f => s"$root/$DataDir/$f")
+    m.schema.fold(spark.read)(t => spark.read.schema(t)).parquet(paths: _*)
   }
 
   /** Roll the table back to `toVersion`'s file set AS A NEW commit —
     * history only ever grows; the bad snapshots stay inspectable. */
   def rollback(spark: SparkSession, root: String, toVersion: Int): Int = {
     val fs = fsOf(spark, root)
-    val files = readManifest(fs, root, toVersion)._2
+    val target = readManifest(fs, root, toVersion)
     val next = versions(fs, root).max + 1
-    writeManifest(fs, root, next, "rollback", files)
+    writeManifest(fs, root, next, "rollback", target.files, schema = target.schema)
     next
   }
 
@@ -224,8 +268,8 @@ object Snapshots {
     import spark.implicits._
     val fs = fsOf(spark, root)
     versions(fs, root).map { v =>
-      val (op, files) = readManifest(fs, root, v)
-      (v, op, files.size.toLong)
+      val m = readManifest(fs, root, v)
+      (v, m.operation, m.files.size.toLong)
     }.toDF("version", "operation", "n_files")
   }
 
@@ -240,7 +284,7 @@ object Snapshots {
     val vs = versions(fs, root)
     require(vs.nonEmpty, s"no snapshots under $root")
     val keep = vs.takeRight(keepLast)
-    val referenced = keep.flatMap(v => readManifest(fs, root, v)._2).toSet
+    val referenced = keep.flatMap(v => readManifest(fs, root, v).files).toSet
     val dataDir = new Path(root, DataDir)
     val victims = fs.listStatus(dataDir).toSeq
       .filter(s => s.isFile && !referenced.contains(s.getPath.getName))

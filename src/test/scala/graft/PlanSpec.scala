@@ -723,6 +723,33 @@ class PlanSpec extends AnyFunSuite with SparkTestBase {
     assert(j(4) - j(2) == 7, s"longestPathDag per-pair job census moved: $j")
   }
 
+  test("readSnapshot of a schema-carrying snapshot runs no job") {
+    val path = java.nio.file.Files.createTempDirectory("graft_plan_snap_").toString
+    graft.sources.Snapshots.commit(spark.range(0, 10).toDF(), path)
+    val (jobs, _) = jobCensus(graft.sources.Snapshots.readSnapshot(spark, path): Unit)
+    assert(jobs == 0, s"reading a snapshot with a schema line ran $jobs jobs")
+  }
+
+  test("kpiRecord census: one record is at most 3 jobs and plans no join") {
+    import org.apache.spark.sql.functions._
+    // two-partition scans with no exchange of their own (a repartition
+    // would add one shuffle-map job per input; a Seq.toDF would be
+    // folded to a local relation)
+    def labels(n: Long, ls: String*) = spark.range(0, n, 1, 2).select(
+      element_at(array(ls.map(lit(_)): _*), (col("id") % ls.size + 1).cast("int"))
+        .as("sentiment"))
+    val v = labels(6, "positive", "Neutral", null)
+    val c = labels(9, "negative", "POSITIVE")
+    val kpi = operators.Kpis.kpiRecord(v, c, "sentiment", "sentiment", "d", "t")
+    val (jobs, _) = jobCensus(kpi.collect(): Unit)
+    // two shuffle-map stages (the (side, key) count, the global fold)
+    // and the result stage
+    assert(jobs <= 3, s"kpiRecord job census grew: $jobs")
+    val p = kpi.queryExecution.executedPlan.toString
+    assert(!p.contains("Join") && !p.contains("CartesianProduct"),
+      s"kpiRecord must plan no join:\n$p")
+  }
+
   test("robotsDecide: rules join is an equi join on host — no cartesian fallback") {
     import spark.implicits._
     import graft.operators.Web

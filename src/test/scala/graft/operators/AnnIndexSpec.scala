@@ -211,6 +211,41 @@ class AnnIndexSpec extends AnyFunSuite with SparkTestBase {
     assert(probe() == afterDelete)
   }
 
+  test("compact leaves the session conf alone and keeps non-victim lists under a static session") {
+    import spark.implicits._
+    val vecs = Seq(
+      (1L, Array(10.0f, 0f, 0f, 0f)), (2L, Array(10.1f, 0f, 0f, 0f)),
+      (3L, Array(0f, 10.0f, 0f, 0f)), (4L, Array(0f, 10.2f, 0f, 0f)))
+      .toDF("vec_id", "embedding")
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val prev = spark.conf.getOption(key)
+    // static: the mode that would drop every partition the compaction
+    // does not rewrite, were the write to follow the session
+    spark.conf.set(key, "static")
+    try {
+      val path = tmp()
+      AnnIndex.buildIvfPq(vecs, "vec_id", "embedding", path,
+        nlist = 2, m = 2, ksub = 2)
+      val lists = spark.read.parquet(s"$path/codes")
+        .select("neighbor_id", "list").as[(Long, Int)].collect().toMap
+      assert(lists.values.toSet.size == 2, "fixture sanity: two lists in use")
+      // one tombstone: its list is the only victim, the other list
+      // is not rewritten and must survive as it is
+      AnnIndex.deleteIvfPq(Seq(1L).toDF("vec_id"), "vec_id", path)
+      val confBefore = spark.conf.getAll
+      AnnIndex.compactIvfPq(spark, path)
+      assert(spark.conf.getAll == confBefore,
+        "compaction must not touch the session conf")
+      assert(spark.conf.get(key) == "static")
+      val left = spark.read.parquet(s"$path/codes")
+        .select("neighbor_id").as[Long].collect().toSet
+      assert(left == lists.keySet - 1L, "non-victim list must survive")
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
   test("compact deletes a list directory its tombstones fully empty") {
     import spark.implicits._
     // 2 tiny clusters far apart → nlist=2 puts each in its own list

@@ -3040,6 +3040,53 @@ class KpisSpec extends AnyFunSuite with SparkTestBase {
     val cm = row.getAs[Map[String, Long]]("comment_sentiment_counts")
     assert(cm == Map("negative" -> 1L, "unknown" -> 1L))
   }
+
+  /** The two-aggregate formula kpiRecord replaced, kept as the
+    * reference: each side reduced to one row on its own, then the two
+    * rows cross-joined. */
+  private def twoAggregateKpi(videos: org.apache.spark.sql.DataFrame,
+      comments: org.apache.spark.sql.DataFrame, date: String,
+      at: String): org.apache.spark.sql.DataFrame = {
+    def asMap: org.apache.spark.sql.Column =
+      map_from_entries(array_sort(collect_list(struct(col("key"), col("n")))))
+    val v = Kpis.countByNormalized(videos, "sentiment").agg(
+      sum(col("n")).as("total_videos"), asMap.as("video_sentiment_counts"))
+    val c = Kpis.countByNormalized(comments, "sentiment").agg(
+      sum(col("n")).as("total_comments"), asMap.as("comment_sentiment_counts"))
+    v.crossJoin(c).select(lit(date).as("ingest_date"),
+      col("total_videos"), col("total_comments"),
+      col("video_sentiment_counts"), col("comment_sentiment_counts"),
+      lit(at).as("generated_at_utc"))
+  }
+
+  test("kpiRecord equals the two-aggregate formula: seeded labels, empty sides, schema") {
+    val labels = Seq("positive", "Positive", "NEGATIVE", "neutral", "Neutral",
+      "mixed", null)
+    val rnd = new scala.util.Random(20261020L)
+    def side(n: Int): org.apache.spark.sql.DataFrame =
+      Seq.fill(n)(labels(rnd.nextInt(labels.size))).toDF("sentiment")
+        .repartition(3)
+    val empty = Seq.empty[String].toDF("sentiment")
+    val cases = Seq.tabulate(4)(_ => (side(1 + rnd.nextInt(60)),
+      side(1 + rnd.nextInt(200)))) ++
+      Seq((empty, side(17)), (side(9), empty), (empty, empty))
+    cases.zipWithIndex.foreach { case ((v, c), i) =>
+      val got = Kpis.kpiRecord(v, c, "sentiment", "sentiment", "2026-01-21", "t0")
+      val want = twoAggregateKpi(v, c, "2026-01-21", "t0")
+      assert(got.schema == want.schema, s"case $i schema: ${got.schema} vs ${want.schema}")
+      val (g, w) = (got.collect().toSeq, want.collect().toSeq)
+      assert(g.size == 1 && g == w, s"case $i: $g vs $w")
+      // map entry order too: both maps are key-sorted
+      def entries(df: org.apache.spark.sql.DataFrame) = df.select(
+        map_entries(col("video_sentiment_counts")),
+        map_entries(col("comment_sentiment_counts"))).collect().toSeq
+      assert(entries(got) == entries(want), s"case $i map entry order")
+    }
+    // an empty side is a null total and an empty map
+    val row = Kpis.kpiRecord(empty, empty, "sentiment", "sentiment", "d", "t").head
+    assert(row.isNullAt(1) && row.isNullAt(2))
+    assert(row.getMap[String, Long](3).isEmpty && row.getMap[String, Long](4).isEmpty)
+  }
 }
 
 class CleanSpec extends AnyFunSuite with SparkTestBase {

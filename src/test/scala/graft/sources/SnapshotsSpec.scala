@@ -1,6 +1,7 @@
 package graft.sources
 
 import graft.SparkTestBase
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
 /** [[Snapshots]] end to end: append/overwrite history, time travel,
@@ -15,6 +16,107 @@ class SnapshotsSpec extends SparkTestBase {
   private def rows(path: String, v: Int = -1): Set[Long] =
     Snapshots.readSnapshot(spark, path, v)
       .select(col("id")).as[Long].collect().toSet
+
+  private def fsOf(path: String) = new org.apache.hadoop.fs.Path(path)
+    .getFileSystem(spark.sessionState.newHadoopConf())
+
+  private def manifestLines(path: String, v: Int): Seq[String] = {
+    val in = fsOf(path).open(
+      new org.apache.hadoop.fs.Path(path, f"manifests/v$v%05d.manifest"))
+    try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toSeq
+    finally in.close()
+  }
+
+  private def schemaLine(path: String, v: Int): Option[String] =
+    manifestLines(path, v).find(_.startsWith("schema="))
+
+  private def dataFiles(path: String, v: Int): Seq[String] =
+    manifestLines(path, v).filter(_.startsWith("file="))
+      .map(f => s"$path/data/${f.stripPrefix("file=")}")
+
+  /** What schema inference makes of snapshot `v`'s files: the read
+    * every snapshot paid for before manifests carried a schema. */
+  private def inferred(path: String, v: Int) =
+    spark.read.parquet(dataFiles(path, v): _*).schema
+
+  test("a snapshot carries its schema: equal to inference over a type zoo") {
+    import org.apache.spark.sql.types._
+    val meta = new MetadataBuilder().putString("comment", "a described column")
+      .putLong("width", 7L).build()
+    val schema = StructType(Seq(
+      StructField("id", LongType, nullable = false),
+      StructField("name", StringType, nullable = false, meta),
+      StructField("amount", DecimalType(18, 2)),
+      StructField("wide", DecimalType(38, 10), nullable = false),
+      StructField("day", DateType),
+      StructField("ts", TimestampType),
+      StructField("ts_ntz", TimestampNTZType, nullable = false),
+      StructField("blob", BinaryType),
+      StructField("flag", BooleanType, nullable = false),
+      StructField("ratio", DoubleType), StructField("small", ShortType),
+      StructField("tags", ArrayType(StringType, containsNull = false), nullable = false),
+      StructField("attrs", MapType(StringType,
+        ArrayType(IntegerType, containsNull = false), valueContainsNull = false)),
+      StructField("nested", StructType(Seq(
+        StructField("a", IntegerType, nullable = false),
+        StructField("b", ArrayType(StructType(Seq(
+          StructField("x", FloatType, nullable = false),
+          StructField("y", MapType(IntegerType, StringType, valueContainsNull = false)))),
+          containsNull = false)))), nullable = false)))
+    val rows = (0 until 6).map { i =>
+      Row(i.toLong, s"n$i", if (i % 2 == 0) BigDecimal(i) / 4 else null,
+        BigDecimal(i * 3) / 10, java.sql.Date.valueOf(f"2026-01-${i + 1}%02d"),
+        java.sql.Timestamp.valueOf(f"2026-01-21 10:0$i:00"),
+        java.time.LocalDateTime.of(2026, 1, 21, 10, i),
+        Array[Byte](i.toByte, 1), i % 2 == 0, i * 0.5, i.toShort,
+        Seq(s"t$i"), Map(s"k$i" -> Seq(i, i + 1)),
+        Row(i, Seq(Row(i.toFloat, Map(i -> s"v$i")))))
+    }
+    val df = spark.createDataFrame(
+      java.util.Arrays.asList(rows: _*), schema).repartition(2)
+    val path = tmp()
+    Snapshots.commit(df, path)
+    assert(schemaLine(path, 1).nonEmpty, "an overwrite writes the schema line")
+    val read = Snapshots.readSnapshot(spark, path)
+    assert(read.schema == inferred(path, 1),
+      s"carried:\n${read.schema.treeString}\ninferred:\n${inferred(path, 1).treeString}")
+    assert(read.schema("name").metadata == meta, "column metadata survives")
+    assert(read.orderBy("id").collect().toSeq ==
+      spark.read.schema(inferred(path, 1)).parquet(dataFiles(path, 1): _*)
+        .orderBy("id").collect().toSeq)
+  }
+
+  test("schema line fail-safes: equal append keeps it, differing append and legacy manifests infer, rollback copies") {
+    val path = tmp()
+    Snapshots.commit(spark.range(0, 3).toDF(), path)                      // v1
+    Snapshots.commit(spark.range(3, 5).toDF(), path)                      // v2 equal
+    assert(schemaLine(path, 2) == schemaLine(path, 1) && schemaLine(path, 2).nonEmpty)
+    // same column, another type: the append writes no schema line and
+    // the read falls back to inference, as before snapshots carried one
+    Snapshots.commit(spark.range(5, 6).select(col("id").cast("int").as("id")), path) // v3
+    assert(schemaLine(path, 3).isEmpty)
+    assert(Snapshots.readSnapshot(spark, path).schema == inferred(path, 3))
+    // an append onto a manifest without the line stays without it
+    Snapshots.commit(spark.range(6, 7).toDF(), path)                      // v4
+    assert(schemaLine(path, 4).isEmpty)
+    assert(rows(path) == (0L until 7L).toSet)
+    // rollback copies the line of the version it restores, or its absence
+    assert(Snapshots.rollback(spark, path, toVersion = 2) == 5)
+    assert(schemaLine(path, 5) == schemaLine(path, 2))
+    assert(rows(path) == (0L until 5L).toSet)
+    assert(Snapshots.rollback(spark, path, toVersion = 3) == 6)
+    assert(schemaLine(path, 6).isEmpty)
+    // a legacy manifest (written before the schema line existed) reads
+    // by inference: strip the line from v2 and publish it as v7
+    val legacy = manifestLines(path, 2).filterNot(_.startsWith("schema="))
+      .filterNot(_.startsWith("version=")).filterNot(_.startsWith("operation="))
+      .map(_.stripPrefix("file="))
+    Snapshots.writeManifest(fsOf(path), path, 7, "overwrite", legacy)
+    assert(schemaLine(path, 7).isEmpty)
+    assert(Snapshots.readSnapshot(spark, path).schema == inferred(path, 7))
+    assert(rows(path) == (0L until 5L).toSet)
+    assert(Snapshots.snapshots(spark, path).count() == 7L)
+  }
 
   test("append/overwrite history stays readable; latest tracks commits") {
     val path = tmp()
