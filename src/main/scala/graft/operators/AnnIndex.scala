@@ -187,10 +187,10 @@ object AnnIndex {
       val victims = codes.join(ts, Seq("neighbor_id"), "left_semi")
         .select(col("list")).distinct().collect().map(_.get(0))
       if (victims.nonEmpty) {
-        val next = codes.filter(col("list").isin(victims.toIndexedSeq: _*))
-          .join(ts, Seq("neighbor_id"), "left_anti")
-          // read-what-you-overwrite: materialize before rewriting
-          .localCheckpoint()
+        // read-what-you-overwrite: materialize before rewriting
+        val next = CheckpointHygiene.materialize(
+          codes.filter(col("list").isin(victims.toIndexedSeq: _*))
+            .join(ts, Seq("neighbor_id"), "left_anti"))
         // force dynamic overwrite for this write only, whatever the
         // session says — static mode would silently DROP every
         // non-victim partition, and the session conf is shared

@@ -65,140 +65,7 @@ object Dedup {
       .drop("__fp", "__rn")
   }
 
-  /** The materialization substrate of the iterative kernels: every
-    * checkpoint, keyed cache and broadcast decision of [[Graph]]'s
-    * fixpoints is made here, once, instead of at each call site.
-    *
-    *  - [[materialize]] checkpoints a frame eagerly, with any metrics
-    *    (a row count, a normalizer sum, a fixpoint fingerprint) fused
-    *    into the same job through `observe` — no separate count or
-    *    collect per round. The checkpoint is reliable when the session
-    *    has a checkpoint dir (it survives executor loss) and
-    *    executor-local otherwise.
-    *  - [[Rolling]] holds an iteration's state: each advance
-    *    materializes the next frame and frees the one it replaces, so
-    *    peak storage is two states, not one per round.
-    *  - `reroot` gives the checkpoint fresh attribute ids, for loops
-    *    that re-join frames descending from one table (Spark's
-    *    ambiguous-self-join check trips on those after a few rounds);
-    *    [[free]] still reaches the checkpointed RDD under it.
-    *  - [[broadcastIfSmall]] and [[persistForKey]] decide, from a row
-    *    count the kernel knows, whether a state frame is broadcast and
-    *    whether a cache is laid out by its join key.
-    *
-    * [[free]] is also the release for checkpoints made elsewhere.
-    * `Dataset.unpersist` cannot free them: checkpoint blocks are
-    * RDD-level, not cacheManager entries, so they otherwise survive
-    * until a driver GC lets ContextCleaner notice (on a long-lived
-    * session that pins every superseded snapshot in the storage
-    * region). Spark logs one "was locally checkpointed" warning per
-    * freed local checkpoint. */
-  private[graft] object CheckpointHygiene {
-    import org.apache.spark.rdd.RDD
-    import org.apache.spark.storage.StorageLevel
-
-    /** Row bound for [[broadcastIfSmall]]: a million skinny state rows
-      * build a 16–24 MB broadcast. */
-    val BroadcastMaxRows = 1000000L
-
-    /** Row count from which [[persistForKey]] lays its cache out by
-      * key. */
-    val KeyedCacheMinRows = 200000L
-
-    /** Free the blocks behind a checkpointed frame — also a re-rooted
-      * one, whose plan reads the checkpoint through row conversions.
-      * Safe only once nothing will read the frame again. */
-    def free(df: DataFrame): Unit =
-      df.queryExecution.analyzed.foreach {
-        case l: org.apache.spark.sql.execution.LogicalRDD => release(l.rdd)
-        case _ => ()
-      }
-
-    /** Unpersists the first persisted or checkpointed RDD down the
-      * one-to-one chain from `rdd`. */
-    @scala.annotation.tailrec
-    private def release(rdd: RDD[_]): Unit =
-      if (rdd.getStorageLevel != StorageLevel.NONE || rdd.isCheckpointed)
-        rdd.unpersist(blocking = false)
-      else rdd.dependencies match {
-        case Seq(d: org.apache.spark.OneToOneDependency[_]) => release(d.rdd)
-        case _ => ()
-      }
-
-    /** `df` checkpointed now; `reroot` gives it fresh attribute ids. */
-    def materialize(df: DataFrame, reroot: Boolean = false): DataFrame =
-      checkpoint(df, reroot, Nil)._1
-
-    /** `df` checkpointed now, with `metrics` (aliased aggregate
-      * columns) computed by the same job; they come back by alias. */
-    def materialize(df: DataFrame, metrics: Seq[Column]): (DataFrame, Map[String, Any]) =
-      checkpoint(df, reroot = false, metrics)
-
-    private def checkpoint(df: DataFrame, reroot: Boolean,
-        metrics: Seq[Column]): (DataFrame, Map[String, Any]) = {
-      val obs = org.apache.spark.sql.Observation()
-      val observed = if (metrics.isEmpty) df else df.observe(obs, metrics.head, metrics.tail: _*)
-      val ck =
-        if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) observed.checkpoint()
-        else observed.localCheckpoint()
-      val out = if (reroot) ck.sparkSession.createDataFrame(ck.rdd, ck.schema) else ck
-      (out, if (metrics.isEmpty) Map.empty else obs.get)
-    }
-
-    /** An iteration's state. Each advance materializes the next frame
-      * and frees the one it replaces; the frame it last returned stays
-      * valid until the next advance or [[release]], so a kernel's
-      * result may be that last frame. */
-    final class Rolling(reroot: Boolean = false) {
-      private var last: DataFrame = null
-
-      def advance(df: DataFrame): DataFrame = advance(df, Nil)._1
-
-      /** As [[advance]], with `metrics` observed as [[materialize]] does. */
-      def advance(df: DataFrame, metrics: Seq[Column]): (DataFrame, Map[String, Any]) = {
-        val next = checkpoint(df, reroot, metrics)
-        release()
-        last = next._1
-        next
-      }
-
-      def release(): Unit = {
-        if (last != null) free(last)
-        last = null
-      }
-    }
-
-    /** `df` with a broadcast hint when the kernel knows it holds at
-      * most `rows` rows, `rows` ≤ [[BroadcastMaxRows]]. Checkpointed
-      * state carries no statistics, so the planner assumes it enormous
-      * and plans a sort-merge join that re-sorts the persisted edge
-      * cache every round; the hint restores the broadcast join the
-      * statistics would have picked. */
-    def broadcastIfSmall(df: DataFrame, rows: Long): DataFrame =
-      if (rows >= 0 && rows <= BroadcastMaxRows) broadcast(df) else df
-
-    /** `df` cached for repeated per-iteration joins on `key`, and its
-      * row count. From [[KeyedCacheMinRows]] rows the cache is
-      * re-laid-out hash(`key`) first, so every iteration's probe and
-      * every `groupBy(key)` reads it with no further exchange — at
-      * 100 TB, `iterations` full-edge shuffles saved for one extra
-      * cache pass. Below it the adaptive layout stands: a fixture-sized
-      * fixpoint reads its cache dozens of times, and pinning many
-      * near-empty partitions costs more task launches than the
-      * (broadcast-joined) exchanges could save. */
-    def persistForKey(df: DataFrame, key: String): (DataFrame, Long) = {
-      val base = df.persist()
-      val n = base.count()
-      if (n >= KeyedCacheMinRows) {
-        val keyed = base.repartition(col(key)).persist()
-        keyed.count()
-        base.unpersist()
-        (keyed, n)
-      } else (base, n)
-    }
-  }
-
-/** Metric-name prefix for the stop-bucket cap observations. */
+  /** Metric-name prefix for the stop-bucket cap observations. */
   val CapMetricPrefix = "graft.lsh"
 
   /** "No silent caps": attach a `CollectMetrics` observation counting
@@ -409,13 +276,12 @@ object Dedup {
       shingleWidth: Int = 3, maxBucket: Int = 64,
       label: String = ""): DataFrame = {
     require(numHashes % bandCount == 0, "bandCount must divide numHashes")
-    // delta-sized and checkpointed (the etaSquared discipline): four
+    // delta-sized and materialized ([[CheckpointHygiene]]): four
     // consumers (shadowing, banding, both pair sides) would otherwise
     // each re-minhash the delta
-    val deltaSig = deltaDocs.select(col(idCol).as("__id"),
+    val deltaSig = CheckpointHygiene.materialize(deltaDocs.select(col(idCol).as("__id"),
         minhash_text(col(textCol), shingleWidth, numHashes).as("__sig"))
-      .filter(col("__id").isNotNull)
-      .localCheckpoint()
+      .filter(col("__id").isNotNull))
     val survivors = sigStore
       .select(col(sigIdCol).as("__id"), col(sigCol).as("__sig"))
       .join(deltaSig.select(col("__id")), Seq("__id"), "left_anti")
@@ -1015,63 +881,46 @@ object Dedup {
     * node takes the minimum label among itself and its neighbors;
     * converges in O(graph diameter) rounds. Each round is one equi
     * join + one aggregate — all shuffles on the node id, nothing
-    * driver-side except the per-round convergence COUNT (a scalar,
-    * not a collect). Near-dup components are short chains (diameter
-    * rarely beyond a handful), so the loop ends early; `maxRounds`
-    * bounds a pathological graph and overflow fails loudly rather
-    * than returning half-merged clusters.
+    * driver-side except the per-round count of changed labels (a
+    * scalar observed in the round's materialization, not a collect).
+    * Near-dup components are short chains (diameter rarely beyond a
+    * handful), so the loop ends early; `maxRounds` bounds a
+    * pathological graph and overflow fails loudly rather than
+    * returning half-merged clusters.
     *
-    * Each round CHECKPOINTS its labels — this is load-bearing, not a
-    * cache: round k's plan references round k−1 twice (neighbor-min
-    * join + convergence diff), so without lineage truncation the
-    * logical plan doubles per round and analysis itself goes
-    * exponential (a 12-round path graph OOMs just rendering the plan
-    * string). With a checkpoint dir configured the checkpoint is
-    * reliable (survives executor loss — the cluster posture); without
-    * one it falls back to `localCheckpoint` (executor-local blocks —
-    * fine for tests/single-node). Output: (id, cluster) for every
-    * node that appears in `pairs`. */
+    * Each round materializes its labels through a
+    * [[CheckpointHygiene.Rolling]] state — load-bearing, not a cache:
+    * round k's plan references round k−1 twice (neighbor-min join +
+    * convergence flag), so without lineage truncation the logical
+    * plan doubles per round and analysis itself goes exponential (a
+    * 12-round path graph OOMs just rendering the plan string); the
+    * previous round's labels are freed as the next land. Output:
+    * (id, cluster) for every node that appears in `pairs`. */
   def connectedComponents(pairs: DataFrame, idACol: String, idBCol: String,
                           maxRounds: Int = 20): DataFrame = {
     import org.apache.spark.storage.StorageLevel
-    // LAZY checkpoint: the convergence count right after is the round's
-    // single materializing action — eager would spend a second job.
-    // Prior rounds' checkpoint blocks are unpersisted EXPLICITLY once
-    // the next round is materialized: ContextCleaner only reclaims on a
-    // driver GC, so on a long-lived shared session every round's label
-    // table would otherwise stay pinned in the storage region — peak
-    // concurrent storage here is two label tables, not maxRounds of
-    // them. (Reliable-checkpoint FILES are still cleaner-managed via
-    // spark.cleaner.referenceTracking.cleanCheckpoints.)
-    def truncate(df: DataFrame): DataFrame =
-      if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
-        df.checkpoint(eager = false)
-      else df.localCheckpoint(eager = false)
     val edges = pairs.select(col(idACol).as("src"), col(idBCol).as("dst"))
       .unionByName(pairs.select(col(idBCol).as("src"), col(idACol).as("dst")))
       .distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
-    var ckpt = truncate(edges.select(col("src").as("id")).distinct()
+    val state = new CheckpointHygiene.Rolling()
+    var labels = state.advance(edges.select(col("src").as("id")).distinct()
       .select(col("id"), col("id").as("cluster")))
-    var labels = ckpt
     var round = 0
     var changed = 1L
     while (round < maxRounds && changed > 0) {
       val neighborMin = edges
         .join(labels.select(col("id").as("dst"), col("cluster").as("__nl")), Seq("dst"))
         .groupBy(col("src").as("id")).agg(min(col("__nl")).as("__nmin"))
-      // the change flag rides INSIDE the checkpointed frame, so the
-      // convergence count needs no second join against the old labels
-      val next = truncate(labels
+      // the change flag is counted in the round's own materialization,
+      // so convergence needs no second job over the new labels
+      val (next, m) = state.advance(labels
         .join(neighborMin, Seq("id"), "left")
         .select(col("id"),
           least(col("cluster"), coalesce(col("__nmin"), col("cluster"))).as("cluster"),
-          (coalesce(col("__nmin"), col("cluster")) < col("cluster")).as("__changed")))
-      changed = next.filter(col("__changed")).count()
-      // next is materialized by the count above; the previous round's
-      // blocks are dead weight from here on
-      CheckpointHygiene.free(ckpt)
-      ckpt = next
+          (coalesce(col("__nmin"), col("cluster")) < col("cluster")).as("__changed")),
+        Seq(count_if(col("__changed")).as("changed")))
+      changed = m("changed").asInstanceOf[Long]
       labels = next.select(col("id"), col("cluster"))
       round += 1
     }

@@ -30,11 +30,10 @@ import scala.collection.mutable
   * checkpointed every few iterations so deep iteration counts don't
   * build deep plans. Every checkpoint, keyed cache and broadcast
   * decision of the iterative kernels below is made by
-  * [[Dedup.CheckpointHygiene]]. Dangling-node mass is
+  * [[CheckpointHygiene]]. Dangling-node mass is
   * dropped, the standard simplified variant (totals shrink slightly;
   * rankings are unaffected for host-filter use). */
 object Graph {
-  import Dedup.CheckpointHygiene
   import CheckpointHygiene.{Rolling, broadcastIfSmall, materialize, persistForKey}
 
   /** splitmix64 finalizer — well-spread bits even for sequential or
@@ -740,12 +739,11 @@ object Graph {
     // union-find ~a scan). Past the cap, fall back to
     // [[connectedComponentsStar]] — same labels by the shared min-id
     // contract (spec-pinned equal).
-    // delta-sized and checkpointed (the etaSquared discipline): the
+    // delta-sized and materialized ([[CheckpointHygiene]]): the
     // projection is consumed by two actions (the cap count and the
     // union-find collect, or the fallback fixpoint) and each would
     // otherwise replay the two corpus-scale label joins
-    val projEdges = proj.filter(col("pa") =!= col("pb")).distinct()
-      .localCheckpoint()
+    val projEdges = materialize(proj.filter(col("pa") =!= col("pb")).distinct())
     val nEdges = projEdges.count()
     val mapping: DataFrame =
       if (nEdges <= driverMaxEdges) {
@@ -1421,7 +1419,7 @@ object Graph {
     * any fixed round count is a defined, replayable semantics —
     * exact once rounds ≥ temporal diameter). Per round: the arrivals
     * (broadcast when 2·|E|, the kernel's bound on their rows, is under
-    * [[Dedup.CheckpointHygiene.BroadcastMaxRows]]) join the persisted
+    * [[CheckpointHygiene.BroadcastMaxRows]]) join the persisted
     * edges on src with t ≥ arrival, the relaxed arrivals are unioned
     * with the old ones, and one min-aggregate on node keeps the
     * earliest; the result is materialized, freeing the round before,
@@ -1465,7 +1463,7 @@ object Graph {
     *
     * Per round: the distances (broadcast when 2·|E|, the kernel's
     * bound on their rows, is under
-    * [[Dedup.CheckpointHygiene.BroadcastMaxRows]]) join the persisted
+    * [[CheckpointHygiene.BroadcastMaxRows]]) join the persisted
     * min-weight edges on src, the relaxed distances are unioned with
     * the old ones, and one min-aggregate on node keeps the shortest —
     * skinny (id, dist) rows, materialized every round, freeing the
@@ -1803,7 +1801,7 @@ object Graph {
         col("cluster").as("__bc")), "r_id")
       .groupBy(col("l_id").as("id"))
       .agg(min(col("__bc")).as("__bc"))
-    val out = p
+    val out = materialize(p
       .join(counts, Seq("id"))
       .join(coreLabels.withColumn("__core", lit(1)), Seq("id"), "left")
       .join(borderLabels, Seq("id"), "left")
@@ -1812,8 +1810,7 @@ object Graph {
           .when(col("__bc").isNotNull, "border")
           .otherwise("noise").as("kind"),
         when(col("__core") === 1, col("cluster"))
-          .otherwise(col("__bc")).as("cluster"))
-      .localCheckpoint()
+          .otherwise(col("__bc")).as("cluster")))
     pairs.unpersist()
     out
   }
@@ -1854,14 +1851,13 @@ object Graph {
       .filter(col("common") >= minCommon)
       .join(e, col("a") === col("lo") && col("c") === col("hi"),
         "left_anti")
-    val out = pairs
+    val out = materialize(pairs
       .join(deg.select(col("n").as("a"), col("deg").as("deg_a")), Seq("a"))
       .join(deg.select(col("n").as("c"), col("deg").as("deg_c")), Seq("c"))
       .withColumn("jaccard_micro",
         expr("(1000000 * common) div (deg_a + deg_c - common)"))
       .select(col("a"), col("c"), col("common"), col("deg_a"),
-        col("deg_c"), col("jaccard_micro"))
-      .localCheckpoint()
+        col("deg_c"), col("jaccard_micro")))
     e.unpersist()
     out
   }
@@ -1897,7 +1893,7 @@ object Graph {
     val deg = adj.groupBy(col("n")).agg(count(lit(1)).as("deg"))
     val adjD = adj.join(deg.select(col("n").as("m"),
       col("deg").as("__dm")), Seq("m"))
-    val out = adjD.select(col("m").as("__mid"), col("n").as("a"),
+    val out = materialize(adjD.select(col("m").as("__mid"), col("n").as("a"),
         col("__dm"))
       .join(adjD.select(col("m").as("__mid"), col("n").as("c")), "__mid")
       .filter(col("a") < col("c"))
@@ -1907,8 +1903,7 @@ object Graph {
       .filter(col("common") >= minCommon)
       .join(e, col("a") === col("lo") && col("c") === col("hi"),
         "left_anti")
-      .select(col("a"), col("c"), col("common"), col("ra_micro"))
-      .localCheckpoint()
+      .select(col("a"), col("c"), col("common"), col("ra_micro")))
     e.unpersist()
     out
   }
@@ -1944,10 +1939,9 @@ object Graph {
       .distinct()
       .groupBy(col("n").as("id"))
       .agg(count(lit(1)).as("n_within_2"))
-    val out = reach
+    val out = materialize(reach
       .join(deg.select(col("n").as("id"), col("deg")), Seq("id"))
-      .select(col("id"), col("deg"), col("n_within_2"))
-      .localCheckpoint()
+      .select(col("id"), col("deg"), col("n_within_2")))
     e.unpersist()
     out
   }
@@ -1996,13 +1990,12 @@ object Graph {
     // otherwise vanish from the group-by instead of reporting
     // n_k = 0, silently dropping rows of the documented
     // degree-spectrum grain (r14 advice).
-    val out = thresholds.join(nk, Seq("k"), "left")
+    val out = materialize(thresholds.join(nk, Seq("k"), "left")
       .join(ek, Seq("k"), "left")
       .na.fill(0L, Seq("n_k", "e_k"))
       .select(col("k"), col("n_k"), col("e_k"),
         when(col("n_k") >= 2L, expr(
-          "(2000000 * e_k) div (n_k * (n_k - 1))")).as("phi_micro"))
-      .localCheckpoint()
+          "(2000000 * e_k) div (n_k * (n_k - 1))")).as("phi_micro")))
     e.unpersist()
     out
   }
@@ -2043,7 +2036,7 @@ object Graph {
         coalesce(col("__l"), concat(lit("__node_"), col("__n")))
           .as("__c"))
     // |E| observe-fused into the community aggregate's materialization
-    // (as Dedup.CheckpointHygiene.materialize observes). The old shape re-ran the
+    // ([[CheckpointHygiene.materialize]]). The old shape re-ran the
     // edge-tagging joins in FOUR subtrees (internal, the two union
     // arms of vol, and the modularity arm's recompute of comm): the
     // endpoint grain computes volume AND internal in one aggregate —
@@ -2056,7 +2049,7 @@ object Graph {
       .join(nlab.select(col("__n").as("hi"), col("__c").as("__ch")),
         Seq("hi"))
     val obsM = org.apache.spark.sql.Observation()
-    val commBase = tagged
+    val commBase = materialize(tagged
       .observe(obsM, count(lit(1)).as("m"))
       .select(explode(array(
         struct(col("__cl").as("community"), (col("__cl") === col("__ch"))
@@ -2066,8 +2059,7 @@ object Graph {
       .select(col("__e.community").as("community"), col("__e.__int"))
       .groupBy(col("community"))
       .agg(count(lit(1)).as("volume"),
-        expr("CAST(sum(__int) div 2 AS BIGINT)").as("internal"))
-      .localCheckpoint()
+        expr("CAST(sum(__int) div 2 AS BIGINT)").as("internal")))
     val m = obsM.get("m").asInstanceOf[Long]
     val comm = commBase
       .withColumn("cut", col("volume") - lit(2L) * col("internal"))
@@ -2086,11 +2078,10 @@ object Graph {
           |    div (4 * CAST($m AS DECIMAL(38,0)) * $m) AS BIGINT)
           |END""".stripMargin).as("q_micro"),
         lit(m).as("m_edges"))
-    val out = comm
+    val out = materialize(comm
       .select(col("community"), col("internal"), col("volume"),
         col("cut"), col("conductance_micro"))
-      .crossJoin(broadcast(q))
-      .localCheckpoint()
+      .crossJoin(broadcast(q)))
     e.unpersist()
     out
   }
@@ -2222,11 +2213,10 @@ object Graph {
     val rootRows = roots.select(col("node"), col("node").as("root"),
       lit(0L).as("depth"),
       concat(lit("/"), col("node").cast("string")).as("path"))
-    val out = ptr.select(col("node"), col("anc").as("root"),
+    val out = materialize(ptr.select(col("node"), col("anc").as("root"),
         col("d").as("depth"),
         concat(lit("/"), col("anc").cast("string"), col("p")).as("path"))
-      .unionByName(rootRows)
-      .localCheckpoint()
+      .unionByName(rootRows))
     ptr.unpersist(); e.unpersist(); roots.unpersist()
     out
   }

@@ -282,17 +282,24 @@ object Layout {
       .persist()
     val ends = pts.groupBy(col("__k"))
       .agg(min(col("__i")).as("lo"), max(col("__i")).as("hi"))
-    var active = ends.filter(col("hi") > col("lo") + 1).persist()
-    val spark = df.sparkSession
-    var terminal = ends.filter(col("hi") <= col("lo") + 1).persist()
-    var rounds = 0
-    var activeCount = active.count()
     // per round: ONE aggregate does max-score, threshold, and the
     // smallest-index argmax together (min_by on the (-d, i) struct —
     // lexicographic struct ordering IS max-d-then-min-i), so there is
-    // no join-back and the only action is the frontier count; the
-    // terminal union is checkpointed every few rounds, not per round
-    val pendingM = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    // no join-back. It is materialized with the next frontier's size
+    // observed in the same job, the round's only action, and the next
+    // frontier and new terminal segments are views over it, so no
+    // round's plan nests the previous round's. The terminal union is
+    // checkpointed every few rounds, not per round.
+    val (first, n0) = CheckpointHygiene.materialize(
+      ends.filter(col("hi") > col("lo") + 1), Seq(count(lit(1)).as("n")))
+    var active = first
+    var activeCount = n0("n").asInstanceOf[Long]
+    var terminal = ends.filter(col("hi") <= col("lo") + 1)
+    val settled = new CheckpointHygiene.Rolling()
+    // materializations the terminal union still reads; the frontier
+    // reads the last one
+    val pending = scala.collection.mutable.ArrayBuffer(first)
+    var rounds = 0
     while (activeCount > 0) {
       require(rounds < maxRounds,
         s"frontier not empty after $maxRounds rounds ($activeCount segments)")
@@ -319,11 +326,16 @@ object Layout {
              |    * (CAST(bx - ax AS DECIMAL(38,0)) * (bx - ax)
              |       + CAST(by - ay AS DECIMAL(38,0)) * (by - ay))
              |END""".stripMargin))
-      val m = interior.groupBy(col("__k"), col("lo"), col("hi"))
-        .agg(max(col("__d")).as("maxd"), max(col("__thr")).as("thr"),
-          expr("min_by(__i, struct(-__d, __i))").as("m"))
-        .persist()
-      pendingM += m
+      // a split segment's children (lo, m) and (m, hi) stay open when
+      // they still hold an interior point
+      val (m, obs) = CheckpointHygiene.materialize(
+        interior.groupBy(col("__k"), col("lo"), col("hi"))
+          .agg(max(col("__d")).as("maxd"), max(col("__thr")).as("thr"),
+            expr("min_by(__i, struct(-__d, __i))").as("m")),
+        Seq(coalesce(sum(when(col("maxd") > col("thr"),
+          (col("m") > col("lo") + 1).cast("long") +
+            (col("hi") > col("m") + 1).cast("long"))), lit(0L)).as("n")))
+      pending += m
       val newTerminal = m.filter(col("maxd") <= col("thr"))
         .select(col("__k"), col("lo"), col("hi"))
       val children = m.filter(col("maxd") > col("thr"))
@@ -331,18 +343,17 @@ object Layout {
           struct(col("lo"), col("m").as("hi")),
           struct(col("m").as("lo"), col("hi")))).as("c"))
         .select(col("__k"), col("c.lo").as("lo"), col("c.hi").as("hi"))
-      val nextActive = children.filter(col("hi") > col("lo") + 1).persist()
+      active = children.filter(col("hi") > col("lo") + 1)
+      activeCount = obs("n").asInstanceOf[Long]
       terminal = terminal
         .unionByName(newTerminal)
         .unionByName(children.filter(col("hi") <= col("lo") + 1))
       rounds += 1
       if (rounds % 4 == 0) {
-        terminal = terminal.localCheckpoint()
-        pendingM.foreach(_.unpersist()); pendingM.clear()
+        terminal = settled.advance(terminal)
+        pending.init.foreach(CheckpointHygiene.free)
+        pending.remove(0, pending.size - 1)
       }
-      activeCount = nextActive.count()
-      active.unpersist()
-      active = nextActive
     }
     val kept = terminal.select(col("__k"), col("lo").as("__i"))
       .unionByName(terminal.select(col("__k"), col("hi").as("__i")))
@@ -351,9 +362,9 @@ object Layout {
       .select(col("__k").as("key"), col("__i").as("i"),
         col("__x").as("x"), col("__y").as("y"))
     // materialize before releasing the frames it reads
-    val result = out.localCheckpoint()
-    pendingM.foreach(_.unpersist()); pendingM.clear()
-    pts.unpersist(); terminal.unpersist(); active.unpersist()
+    val result = CheckpointHygiene.materialize(out)
+    pending.foreach(CheckpointHygiene.free)
+    settled.release(); pts.unpersist()
     result
   }
 }

@@ -169,13 +169,11 @@ object Learn {
     * negative counts at that score plus the counts strictly below it.
     *
     * The corpus-sized work is ONE hash aggregate to the score grain.
-    * The running totals then use the [[Relational.globalRowNumber]]
-    * two-pass shape on the score-grain table — range-partitioned
-    * sort, |partitions| offset rows to the driver, per-partition
-    * windows — NEVER a partition-less global window, so the curve
-    * stays parallel even for a fine-grained score scale. The sorted
-    * grain table is checkpointed for the same reason globalRowNumber
-    * checkpoints: both passes must read one materialization.
+    * The running totals are the engine's one two-pass prefix sum
+    * ([[Relational.runningSums]]) over the score-grain table, each
+    * "below" count the inclusive sum minus the score's own count —
+    * NEVER a partition-less global window, so the curve stays
+    * parallel even for a fine-grained score scale.
     *
     * Returns (score, n_pos, n_neg, cum_pos_below, cum_neg_below),
     * one row per distinct score. Labels must be 0/1. */
@@ -186,29 +184,11 @@ object Learn {
       .groupBy(col(scoreCol).cast("long").as("score"))
       .agg(sum(lbl).as("n_pos"),
         sum(lit(1L) - lbl).as("n_neg"))
-    val sortedRaw = grain.orderBy(col("score"))
-      .withColumn("__pid", spark_partition_id())
-    val sorted =
-      if (scored.sparkSession.sparkContext.getCheckpointDir.isDefined)
-        sortedRaw.checkpoint()
-      else sortedRaw.localCheckpoint()
-    val parts = sorted.groupBy(col("__pid"))
-      .agg(sum(col("n_pos")).as("__p"), sum(col("n_neg")).as("__n"))
-      .orderBy(col("__pid")).collect()
-    val offPos = parts.scanLeft(0L)(_ + _.getLong(1)).dropRight(1)
-    val offNeg = parts.scanLeft(0L)(_ + _.getLong(2)).dropRight(1)
-    val offsets = parts.zipWithIndex.map { case (r, i) =>
-      CurveOffset(r.getInt(0), offPos(i), offNeg(i)) }.toSeq
-    val offsetDf = scored.sparkSession.createDataFrame(offsets)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("__pid")).orderBy(col("score"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-    sorted.join(broadcast(offsetDf), Seq("__pid"))
+    Relational.runningSums(grain, Seq(col("score")),
+        Seq("__pos" -> col("n_pos"), "__neg" -> col("n_neg")))
       .select(col("score"), col("n_pos"), col("n_neg"),
-        (coalesce(sum(col("n_pos")).over(w), lit(0L)) + col("__off_pos"))
-          .as("cum_pos_below"),
-        (coalesce(sum(col("n_neg")).over(w), lit(0L)) + col("__off_neg"))
-          .as("cum_neg_below"))
+        (col("__pos") - coalesce(col("n_pos"), lit(0L))).as("cum_pos_below"),
+        (col("__neg") - coalesce(col("n_neg"), lit(0L))).as("cum_neg_below"))
   }
 
   /** Confusion matrix at EVERY operating point of a quantized scorer
@@ -1124,8 +1104,8 @@ object Learn {
     // a one-task funnel over the whole calibration slice, row-scale
     // at 100 TB. Runs + two-pass prefix sums select the same
     // quantized threshold with no bare window anywhere.
-    val runs = scored.groupBy(col("__s")).agg(count(lit(1)).as("__c"))
-      .localCheckpoint()
+    val runs = CheckpointHygiene.materialize(
+      scored.groupBy(col("__s")).agg(count(lit(1)).as("__c")))
     val cum = graft.operators.Relational.globalPrefixSum(runs,
       Seq(col("__s").asc), "__c", "__cc")
     val n = runs.agg(coalesce(sum(col("__c")), lit(0L)).as("n_cal"))
@@ -2044,17 +2024,14 @@ object Learn {
       s"alphaMilli must be in [0,500), got $alphaMilli")
     val staged = df.filter(col(valueCol).isNotNull)
       .select(floor(col(valueCol).cast("double") * 1000).cast("long").as("__v"))
-    // run-grain and checkpointed: the two spines and the derived
-    // deviation runs all read it; N is observe-fused into the one
-    // materialization (as Dedup.CheckpointHygiene.materialize observes) and rebases
+    // run-grain and materialized: the two spines and the derived
+    // deviation runs all read it; N is observed in the one
+    // materialization ([[CheckpointHygiene.materialize]]) and rebases
     // every rank/trim cut as a literal — the old broadcast(scal) arms
     // re-ran the runs aggregate per consumer
-    val obsN = org.apache.spark.sql.Observation()
-    val runs = staged.groupBy(col("__v")).agg(count(lit(1)).as("__c"))
-      .observe(obsN, coalesce(sum(col("__c")), lit(0L)).as("N"),
-        count(lit(1)).as("R"))
-      .localCheckpoint()
-    val obsVals = obsN.get
+    val (runs, obsVals) = CheckpointHygiene.materialize(
+      staged.groupBy(col("__v")).agg(count(lit(1)).as("__c")),
+      Seq(coalesce(sum(col("__c")), lit(0L)).as("N"), count(lit(1)).as("R")))
     val n = obsVals("N").asInstanceOf[Long]
     val nRuns = obsVals("R").asInstanceOf[Long]
     val rank = (n + 1) / 2
@@ -2288,12 +2265,11 @@ object Learn {
         floor(col(valueCol).cast("double") * 1000).cast("long").as("__v"))
     // category-grain and checkpointed: four consumers below would
     // otherwise each replay the row-scale aggregate
-    val cats = staged.groupBy(col("__c"))
+    val cats = CheckpointHygiene.materialize(staged.groupBy(col("__c"))
       .agg(count(lit(1)).as("__nc"),
         coalesce(sum(col("__v")), lit(0L)).as("__sc"),
         coalesce(sum(expr("CAST(__v AS DECIMAL(38,0)) * __v")),
-          lit(0).cast("decimal(38,0)")).as("__q"))
-      .localCheckpoint()
+          lit(0).cast("decimal(38,0)")).as("__q")))
     val scal = cats.agg(
       coalesce(sum(col("__nc")), lit(0L)).as("__n"),
       coalesce(sum(col("__sc")), lit(0L)).as("__s"),
@@ -2350,9 +2326,8 @@ object Learn {
         col(bCol).cast("string").as("__b"))
     // contingency-grain and checkpointed: margins, scalars, and the
     // chi2 join all read it — one row-scale pass, not four
-    val cont = staged.groupBy(col("__a"), col("__b"))
-      .agg(count(lit(1)).as("__n"))
-      .localCheckpoint()
+    val cont = CheckpointHygiene.materialize(staged.groupBy(col("__a"), col("__b"))
+      .agg(count(lit(1)).as("__n")))
     val rows = cont.groupBy(col("__a")).agg(sum(col("__n")).as("__r"))
     val cols2 = cont.groupBy(col("__b")).agg(sum(col("__n")).as("__cc"))
     val scal = cont.agg(coalesce(sum(col("__n")), lit(0L)).as("n"))
@@ -2626,10 +2601,9 @@ object Learn {
         floor(col(valueCol).cast("double") * 1000).cast("long").as("__v"))
     // run-grain and CHECKPOINTED: the spine materializes once instead
     // of re-running the row-scale runs aggregate per consumer
-    val runs = staged.groupBy(col("__v"))
+    val runs = CheckpointHygiene.materialize(staged.groupBy(col("__v"))
       .agg(sum(when(col("__g1"), 1L).otherwise(0L)).as("__c1"),
-        sum(when(!col("__g1"), 1L).otherwise(0L)).as("__c2"))
-      .localCheckpoint()
+        sum(when(!col("__g1"), 1L).otherwise(0L)).as("__c2")))
     // cumulative counts and value-weighted sums per group over the
     // pooled sorted grid — all four lanes in ONE spine pass
     // (globalPrefixSums), reused by all three pairwise sums:
@@ -3889,16 +3863,14 @@ object Learn {
     // every downstream aggregate is runs-grain, and before the
     // checkpoint each broadcast arm (scal, med, above, final) re-ran
     // the row-scale exchange from scratch (the q435 plan carried 124
-    // Exchanges for one row of output). N is observe-fused into the
-    // materialization (as Dedup.CheckpointHygiene.materialize observes) and rebases
+    // Exchanges for one row of output). N is observed in the
+    // materialization ([[CheckpointHygiene.materialize]]) and rebases
     // as a literal; integer div semantics unchanged — Column./ is
     // DOUBLE division and would shift the cut to ceil(N/2)+1 on even N.
-    val obsN = org.apache.spark.sql.Observation()
-    val gruns = staged.groupBy(col("__g"), col("__v"))
-      .agg(count(lit(1)).as("__c"))
-      .observe(obsN, coalesce(sum(col("__c")), lit(0L)).as("N"))
-      .localCheckpoint()
-    val n = obsN.get("N").asInstanceOf[Long]
+    val (gruns, obsN) = CheckpointHygiene.materialize(
+      staged.groupBy(col("__g"), col("__v")).agg(count(lit(1)).as("__c")),
+      Seq(coalesce(sum(col("__c")), lit(0L)).as("N")))
+    val n = obsN("N").asInstanceOf[Long]
     val runs = gruns.groupBy(col("__v")).agg(sum(col("__c")).as("__c"))
     val cum = Relational.globalPrefixSum(runs, Seq(col("__v").asc),
       "__c", "__cum")
@@ -3907,16 +3879,15 @@ object Learn {
       .agg(min(col("__v")).as("__med"))
     // group-grain and checkpointed: read twice (above total + final);
     // the above total is observe-fused the same way
-    val obsA = org.apache.spark.sql.Observation()
-    val groups = gruns.crossJoin(broadcast(med))
-      .groupBy(col("__g"))
-      .agg(coalesce(sum(col("__c")), lit(0L)).as("__nj"),
-        coalesce(sum(when(col("__v") > col("__med"), col("__c"))
-          .otherwise(0L)), lit(0L)).as("__aj"),
-        min(col("__med")).as("__med"))
-      .observe(obsA, coalesce(sum(col("__aj")), lit(0L)).as("A"))
-      .localCheckpoint()
-    val a = obsA.get("A").asInstanceOf[Long]
+    val (groups, obsA) = CheckpointHygiene.materialize(
+      gruns.crossJoin(broadcast(med))
+        .groupBy(col("__g"))
+        .agg(coalesce(sum(col("__c")), lit(0L)).as("__nj"),
+          coalesce(sum(when(col("__v") > col("__med"), col("__c"))
+            .otherwise(0L)), lit(0L)).as("__aj"),
+          min(col("__med")).as("__med")),
+      Seq(coalesce(sum(col("__aj")), lit(0L)).as("A")))
+    val a = obsA("A").asInstanceOf[Long]
     groups
       .select(col("__g").as("g"), col("__nj").as("n_j"),
         col("__aj").as("above_j"),
@@ -4262,18 +4233,18 @@ object Learn {
     val matches = pairs.select(col("__a").as("item"), col("__n"))
       .union(pairs.select(col("__b").as("item"), col("__n")))
       .groupBy(col("item")).agg(sum(col("__n")).as("n"))
-    val base = items.join(matches, Seq("item"))
-      .withColumn("p", lit(1000L))
-    val k = base.count()
-    // per-round localCheckpoint is REQUIRED, not hygiene: each round's
-    // plan references `terms` twice (the union) and `updated` twice
-    // (direct + the broadcast total), so an uncut lineage grows ~4x
-    // per round — Catalyst planning alone goes exponential (measured:
-    // a 6-row fixture hung for minutes at rounds = 4). The ssspBellmanFord
-    // discipline: materialize the ratings table each round, free the
-    // previous checkpoint.
-    var cur = base.localCheckpoint()
-    var prev: DataFrame = null
+    // the per-round materialization is REQUIRED, not hygiene: each
+    // round's plan references `terms` twice (the union) and `updated`
+    // twice (direct + the broadcast total), so an uncut lineage grows
+    // ~4x per round — Catalyst planning alone goes exponential
+    // (measured: a 6-row fixture hung for minutes at rounds = 4). The
+    // ratings roll through a [[CheckpointHygiene.Rolling]] state, and
+    // the item count k is observed in the first materialization.
+    val state = new CheckpointHygiene.Rolling()
+    val (base, baseObs) = state.advance(items.join(matches, Seq("item"))
+      .withColumn("p", lit(1000L)), Seq(count(lit(1)).as("k")))
+    val k = baseObs("k").asInstanceOf[Long]
+    var cur = base
     for (_ <- 1 to rounds) {
       val pa = cur.select(col("item").as("__a"), col("p").as("__pa"))
       val pb = cur.select(col("item").as("__b"), col("p").as("__pb"))
@@ -4285,32 +4256,27 @@ object Learn {
         .groupBy(col("item"))
         .agg(sum(col("__t")).cast("decimal(38,0)").as("__d"))
       // the normalizer total is FUSED into the round's checkpoint via
-      // observe (as Dedup.CheckpointHygiene.materialize observes): the old
+      // observe ([[CheckpointHygiene.Rolling]]): the old
       // crossJoin(broadcast(tot)) ran `updated`'s subtree twice (once
       // for the broadcast job, once in the checkpointed plan) and paid
       // a broadcast exchange per round; the observed sum rebases as an
       // inlined literal over the one materialization. Same DECIMAL(38,0)
       // lane: sum(__p1) observed as DECIMAL cannot wrap, and the
       // rebase SQL is unchanged but for the literal.
-      val obs = org.apache.spark.sql.Observation()
-      val updated = cur.drop("p").join(denom, Seq("item"))
+      val (updated, obs) = state.advance(cur.drop("p").join(denom, Seq("item"))
         .withColumn("__p1", greatest(lit(1L), expr(
           """CAST((CAST(1000000000 AS DECIMAL(38,0)) * w)
             |  div __d AS BIGINT)""".stripMargin)))
-        .drop("__d")
-        .observe(obs, sum(col("__p1").cast("decimal(38,0)")).as("t"))
-        .localCheckpoint()
-      val totSql = Option(obs.get("t"))
+        .drop("__d"),
+        Seq(sum(col("__p1").cast("decimal(38,0)")).as("t")))
+      val totSql = Option(obs("t"))
         .map(v => s"CAST('$v' AS DECIMAL(38,0))")
         .getOrElse("CAST(NULL AS DECIMAL(38,0))")
-      val next = updated
+      cur = updated
         .withColumn("p", greatest(lit(1L), expr(
           s"""CAST((CAST(1000 AS DECIMAL(38,0)) * ${k} * __p1)
              |  div $totSql AS BIGINT)""".stripMargin)))
         .drop("__p1")
-      if (prev != null) Dedup.CheckpointHygiene.free(prev)
-      prev = updated
-      cur = next
     }
     pairs.unpersist()
     cur.select(col("item"), col("w"), col("n"), col("p").as("p_milli"))
@@ -5012,14 +4978,8 @@ object Learn {
   }
 }
 
-/** Two-pass running-total offset row ([[Learn.binaryScoreCurve]]) —
-  * top-level for the `createDataFrame` TypeTag, like
-  * [[graft.operators.OffsetRow]]. */
-private[operators] case class CurveOffset(__pid: Int, __off_pos: Long,
-    __off_neg: Long)
-
 /** [[Learn.kendallTau]] per-key result row — top-level for the
-  * Encoder TypeTag (the CurveOffset convention). */
+  * Encoder TypeTag. */
 private[operators] case class KendallRow(key: Long, n: Long,
     concordant: Long, discordant: Long, ties_x: Long, ties_y: Long,
     ties_xy: Long, tau_a_milli: Option[Long], tau_b: Option[Double])

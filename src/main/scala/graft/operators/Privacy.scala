@@ -121,7 +121,7 @@ object Privacy {
       .agg(count(lit(1)).as("class_size"))
     val cv = base.groupBy((quasiCols.map(col) :+ col("__v")): _*)
       .agg(count(lit(1)).as("__ncv"))
-    val out = cls.crossJoin(broadcast(gv))
+    val out = CheckpointHygiene.materialize(cls.crossJoin(broadcast(gv))
       .join(cv, quasiCols :+ "__v", "left")
       .withColumn("__ncv0", coalesce(col("__ncv"), lit(0L)))
       .withColumn("__term", abs(
@@ -134,8 +134,7 @@ object Privacy {
            |  div (2 * CAST(class_size AS DECIMAL(38,0)) * $total)
            |  AS BIGINT)""".stripMargin))
       .withColumn("t_close", col("tvd_micro") <= tMicro)
-      .drop("__num")
-      .localCheckpoint()
+      .drop("__num"))
     base.unpersist()
     out
   }

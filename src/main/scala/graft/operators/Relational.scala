@@ -217,11 +217,9 @@ object Relational {
     * irrelevant by construction.
     *
     * The running sum over ordered distinct timestamps is GLOBAL —
-    * the NTILE trap — so it runs as the [[globalRowNumber]] two-pass:
-    * range-sorted + checkpointed, per-partition net sums collected
-    * (one tiny row per partition), offsets broadcast back, and a
-    * partition-local running sum + offset. No partition-less window
-    * at any scale. Zero-length intervals net to 0 and reversed
+    * the NTILE trap — so it is the engine's one two-pass prefix sum,
+    * [[runningSums]]. No partition-less window at any scale.
+    * Zero-length intervals net to 0 and reversed
     * (end < start) intervals are excluded (both documented
     * policies); output: (t_us, n_starts, n_ends, active). */
   def concurrencyProfile(df: DataFrame, startCol: String,
@@ -237,23 +235,7 @@ object Relational {
       .agg(sum(when(col("__d") === 1L, 1L).otherwise(0L)).as("n_starts"),
         sum(when(col("__d") === -1L, 1L).otherwise(0L)).as("n_ends"),
         sum(col("__d")).as("__net"))
-    val sortedRaw = deltas.orderBy(col("t_us"))
-      .withColumn("__pid", spark_partition_id())
-    val sorted =
-      if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
-        sortedRaw.checkpoint()
-      else sortedRaw.localCheckpoint()
-    val parts = sorted.groupBy(col("__pid")).agg(sum(col("__net")).as("__s"))
-      .orderBy(col("__pid")).collect()
-    val offsets = parts.scanLeft(0L)(_ + _.getLong(1)).dropRight(1)
-    val offsetDf = sorted.sparkSession.createDataFrame(
-      parts.map(_.getInt(0)).zip(offsets).map(p => OffsetRow(p._1, p._2)).toSeq)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("__pid")).orderBy(col("t_us"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-        org.apache.spark.sql.expressions.Window.currentRow)
-    sorted.join(broadcast(offsetDf), Seq("__pid"))
-      .withColumn("active", sum(col("__net")).over(w) + col("__offset"))
+    runningSums(deltas, Seq(col("t_us")), Seq("active" -> col("__net")))
       .select(col("t_us"), col("n_starts"), col("n_ends"), col("active"))
   }
 
@@ -1477,45 +1459,54 @@ object Relational {
   /** Contiguous global row numbers 1..N in `orderCols` order WITHOUT
     * the single-partition global window. `ROW_NUMBER() OVER (ORDER BY
     * …)` with no PARTITION BY funnels the entire dataset through one
-    * task — the canonical 100 TB bottleneck. This is the standard
-    * two-pass shape instead: a range-partitioned sort (parallel), a
-    * partition-count aggregate (|partitions| rows to the driver, not
-    * data), then per-partition numbering offset by the preceding
-    * partitions' counts — every stage parallel, the only driver state
-    * a count per partition. The sorted frame is checkpointed so both
-    * passes read one materialization (see the in-body comment). Ranks
-    * depend only on the total order, so the result is identical
+    * task — the canonical 100 TB bottleneck. A row number is the
+    * running sum of 1, so this is [[runningSums]]' two-pass shape.
+    * Ranks depend only on the total order, so the result is identical
     * whatever the partitioning; `orderCols` must be a total order
     * (include a tiebreak) for determinism. */
   def globalRowNumber(df: DataFrame, orderCols: Seq[Column],
-                      out: String = "row_num"): DataFrame = {
-    // CHECKPOINTED, not merely persisted, and not recomputed: the counts
-    // pass and the numbering pass must read the SAME materialization.
-    // Re-running the sort can shift rows across partition boundaries
-    // (RangePartitioner boundary sampling + AQE react to input order,
-    // and an upstream retry may replay nondeterministic data) — then
-    // pass-2's partitions disagree with pass-1's counts and row numbers
-    // silently duplicate or vanish. Reliable checkpoint when a dir is
-    // configured, executor-local otherwise (same policy as
-    // Dedup.connectedComponents).
-    val sortedRaw = df.orderBy(orderCols: _*)
-      .withColumn("__pid", spark_partition_id())
-    val sorted =
-      if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
-        sortedRaw.checkpoint()
-      else sortedRaw.localCheckpoint()
-    val counts = sorted.groupBy(col("__pid")).agg(count(lit(1)).as("__n"))
+                      out: String = "row_num"): DataFrame =
+    runningSums(df, orderCols, Seq(out -> lit(1L)))
+
+  /** `df` with the INCLUSIVE running sum of each integral value column
+    * in `sums` (output name -> value) over `orderCols`, nulls counting
+    * as 0 — the engine's one global prefix sum that never funnels
+    * through a partition-less window. Two passes:
+    *  1. a range-partitioned sort, materialized, and each partition's
+    *     totals collected (|partitions| rows to the driver, not data);
+    *  2. a partition-local running sum plus the broadcast totals of
+    *     the preceding partitions.
+    * The sorted frame is materialized so both passes read the SAME
+    * rows: re-running the sort can shift rows across partition
+    * boundaries (RangePartitioner boundary sampling and AQE react to
+    * input order, and an upstream retry may replay nondeterministic
+    * data), and then pass 2's partitions would disagree with pass 1's
+    * totals. Exclusive sums are inclusive minus the row's own value.
+    * Rows tied in `orderCols` are summed in an arbitrary order. */
+  private[operators] def runningSums(df: DataFrame, orderCols: Seq[Column],
+      sums: Seq[(String, Column)]): DataFrame = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
+    val sorted = CheckpointHygiene.materialize(
+      df.orderBy(orderCols: _*).withColumn("__pid", spark_partition_id()))
+    val totals = sums.map { case (_, v) => coalesce(sum(v), lit(0L)) }
+    val parts = sorted.groupBy(col("__pid")).agg(totals.head, totals.tail: _*)
       .orderBy(col("__pid")).collect()
-    val offsets = counts.scanLeft(0L)(_ + _.getLong(1)).dropRight(1)
-    val offsetDf = sorted.sparkSession.createDataFrame(
-      counts.map(_.getInt(0)).zip(offsets).map(p => OffsetRow(p._1, p._2)).toSeq)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("__pid"))
-      .orderBy(orderCols: _*)
-    sorted
-      .join(broadcast(offsetDf), Seq("__pid"))
-      .withColumn(out, row_number().over(w) + col("__offset"))
-      .drop("__pid", "__offset")
+    val offs = sums.indices.map(i => s"__off$i")
+    val before = sums.indices.map(i => parts.scanLeft(0L)(_ + _.getLong(i + 1)))
+    val offsetDf = df.sparkSession.createDataFrame(
+      java.util.Arrays.asList(parts.indices.map(p =>
+        Row.fromSeq(parts(p).getInt(0) +: before.map(_(p)))): _*),
+      StructType(StructField("__pid", IntegerType, nullable = false) +:
+        offs.map(StructField(_, LongType, nullable = false))))
+    val w = Window.partitionBy(col("__pid")).orderBy(orderCols: _*)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    sums.zip(offs)
+      .foldLeft(sorted.join(broadcast(offsetDf), Seq("__pid"))) {
+        case (d, ((name, v), off)) =>
+          d.withColumn(name, coalesce(sum(v).over(w), lit(0L)) + col(off))
+      }
+      .drop("__pid" +: offs: _*)
   }
 
   /** Z-ORDER table layout ([[graft.functions.zorder2]] as a
@@ -2757,5 +2748,3 @@ object Relational {
         count(lit(1)).as("n_touches"))
   }
 }
-
-private[operators] case class OffsetRow(__pid: Int, __offset: Long)

@@ -254,7 +254,7 @@ object Similarity {
     * a broadcast join against the model-sized (cid, pos, m) table +
     * two hash aggregates (per-(id, cid) distances, per-id argmin);
     * the update is one join + one (cid, pos) aggregate. Centroids
-    * are localCheckpointed each round (model-sized — keeps the plan
+    * roll through a [[CheckpointHygiene.Rolling]] state (model-sized — keeps the plan
     * flat). A cluster that loses every point disappears rather than
     * being re-seeded — deterministic, and the oracle agrees.
     *
@@ -281,25 +281,21 @@ object Similarity {
       .groupBy(col("vec_id"))
       .agg(min(struct(col("d"), col("cid"))).as("__m"))
       .select(col("vec_id"), col("__m.cid").as("cid"), col("__m.d").as("d"))
-    var lastCkpt: DataFrame = null
+    val state = new CheckpointHygiene.Rolling()
     for (_ <- 1 to rounds) {
       val a = assign(ce)
-      ce = a.join(pe, Seq("vec_id"))
+      ce = state.advance(a.join(pe, Seq("vec_id"))
         .groupBy(col("cid"), col("pos"))
         .agg(sum(col("v")).as("__s"), count(lit(1)).as("__n"))
         // sign-split: Spark `div` truncates, DuckDB `//` floors; the
         // nonnegative-dividend form is identical in both (Learn.sdiv)
         .select(col("cid"), col("pos"),
           when(col("__s") >= 0, expr("__s div __n"))
-            .otherwise(-expr("(-__s) div __n")).cast("long").as("m"))
-        .localCheckpoint()
-      if (lastCkpt != null) Dedup.CheckpointHygiene.free(lastCkpt)
-      lastCkpt = ce
+            .otherwise(-expr("(-__s) div __n")).cast("long").as("m")))
     }
-    val out = assign(ce)
-      .select(col("vec_id"), col("cid").as("cluster"), col("d").as("dist2"))
-    val result = out.localCheckpoint()
-    if (lastCkpt != null) Dedup.CheckpointHygiene.free(lastCkpt)
+    val result = CheckpointHygiene.materialize(assign(ce)
+      .select(col("vec_id"), col("cid").as("cluster"), col("d").as("dist2")))
+    state.release()
     pe.unpersist()
     result
   }
@@ -367,7 +363,7 @@ object Similarity {
     * quantization noise per round.
     *
     * Scale shape: the ONE corpus pass is the moments aggregate; the
-    * matrix is model-sized (d² rows, localCheckpointed) and every
+    * matrix is model-sized (d² rows, materialized once) and every
     * iteration is a model-sized join + aggregate + 1-row broadcast —
     * iterations cost nothing at corpus scale. Overflow is guarded
     * against the MEASURED max |cov entry| (one scalar collect).
@@ -380,9 +376,8 @@ object Similarity {
     require(scale > 0, s"scale must be positive, got $scale")
     val m = embeddingMoments(df, idCol, vecCol, scale)
       .select(col("i"), col("j"), col("cov_num"))
-    val full = m.unionByName(m.filter(col("i") =!= col("j"))
-        .select(col("j").as("i"), col("i").as("j"), col("cov_num")))
-      .localCheckpoint()
+    val full = CheckpointHygiene.materialize(m.unionByName(m.filter(col("i") =!= col("j"))
+        .select(col("j").as("i"), col("i").as("j"), col("cov_num"))))
     val stats = full.agg(max(abs(col("cov_num"))).as("mx"),
       countDistinct(col("i")).as("d")).first()
     val maxAbs = if (stats.isNullAt(0)) 0L else stats.getLong(0)
@@ -394,21 +389,20 @@ object Similarity {
       s"covariance magnitude $maxAbs would overflow at scale=$scale, d=$dims")
     var v = full.select(col("i").as("pos")).distinct()
       .select(col("pos"), lit(scale).as("v"))
-    var lastCkpt: DataFrame = null
+    // the last state is the result; the matrix is freed under it
+    val state = new CheckpointHygiene.Rolling()
     for (_ <- 1 to rounds) {
       val w = full
         .join(v.select(col("pos").as("j"), col("v").as("__vj")), Seq("j"))
         .groupBy(col("i")).agg(sum(col("cov_num") * col("__vj")).as("__w"))
       val mx = w.agg(greatest(expr(s"max(abs(__w)) div $scale"), lit(1L))
         .as("__den"))
-      v = w.crossJoin(broadcast(mx))
+      v = state.advance(w.crossJoin(broadcast(mx))
         .select(col("i").as("pos"),
           when(col("__w") >= 0, expr("__w div __den"))
-            .otherwise(-expr("(-__w) div __den")).cast("long").as("v"))
-        .localCheckpoint()
-      if (lastCkpt != null) Dedup.CheckpointHygiene.free(lastCkpt)
-      lastCkpt = v
+            .otherwise(-expr("(-__w) div __den")).cast("long").as("v")))
     }
+    CheckpointHygiene.free(full)
     v
   }
 

@@ -429,21 +429,19 @@ object TextOps {
     // query-grain and checkpointed: referenced by the feedback tail's
     // broadcast, the candidate anti-join AND the pass-2 union — each
     // reference otherwise replays the tokenize + guard chain (r18)
-    val qTerms = queryTermTable(queries, queryIdCol, queryTextCol,
-      maxQueries, "bm25PrfTopKJoin").localCheckpoint()
+    val qTerms = CheckpointHygiene.materialize(queryTermTable(queries,
+      queryIdCol, queryTextCol, maxQueries, "bm25PrfTopKJoin"))
     val dlIdx = index.groupBy(col("doc")).agg(sum(col("tf")).as("dl"))
     // the doc-length sidecar is materialized ONCE (r18: both scoring
     // passes read it; unmaterialized, each pass re-ran the index
     // aggregate and the doc-universe scan) — this is the deployment
     // shape the docstring promises (the sidecar lives beside the
     // index), and its scalars rebase as literals inside the tails
-    val obsDl = org.apache.spark.sql.Observation()
-    val dl = docs.select(col(idCol).as("doc")).distinct()
-      .join(dlIdx, Seq("doc"), "left")
-      .select(col("doc"), coalesce(col("dl"), lit(0L)).as("dl"))
-      .observe(obsDl, count(lit(1)).as("n"), sum(col("dl")).as("l"))
-      .localCheckpoint()
-    val obsVals = obsDl.get
+    val (dl, obsVals) = CheckpointHygiene.materialize(
+      docs.select(col(idCol).as("doc")).distinct()
+        .join(dlIdx, Seq("doc"), "left")
+        .select(col("doc"), coalesce(col("dl"), lit(0L)).as("dl")),
+      Seq(count(lit(1)).as("n"), sum(col("dl")).as("l")))
     val nDl = obsVals("n").asInstanceOf[Long]
     val lDl = Option(obsVals("l")).map(_.asInstanceOf[Long])
     def tfdfFor(terms: DataFrame) =
@@ -466,12 +464,12 @@ object TextOps {
       .withColumn("__r", row_number().over(wExp))
       .filter(col("__r") <= mExpand)
       .select(col("query"), col("token"))
-    // query-sized and checkpointed (the etaSquared discipline): the
+    // query-sized and materialized ([[CheckpointHygiene]]): the
     // expanded term table is referenced twice in pass 2 (term-set
     // pruning + the scoring tail's broadcast), and each reference
     // would otherwise replay the whole pass-1 chain including an
     // index scan
-    val qTerms2 = qTerms.unionByName(expansion).localCheckpoint()
+    val qTerms2 = CheckpointHygiene.materialize(qTerms.unionByName(expansion))
     bm25TopKTailLit(qTerms2, tfdfFor(qTerms2), dl, k, nDl, lDl)
   }
 
@@ -1255,18 +1253,15 @@ object TextOps {
     // the ONE corpus-sized pass; checkpointed immediately so merge
     // iterations fold over the materialized vocabulary table instead
     // of replaying the corpus word count until the first periodic
-    // checkpoint (measured 3× the corpus scans without this)
-    var words = df
+    // checkpoint (measured 3× the corpus scans without this). Each
+    // periodic checkpoint frees the snapshot it replaces; none
+    // outlives the call.
+    val state = new CheckpointHygiene.Rolling()
+    var words = state.advance(df
       .select(explode(tokens(lower(col(textCol)))).as("__w"))
       .filter(col("__w") =!= "")
       .groupBy(col("__w")).agg(count(lit(1)).as("__freq"))
-      .select(split(col("__w"), "").as("__sym"), col("__freq"))
-      .localCheckpoint()
-    // superseded checkpoints are unpersisted EXPLICITLY: waiting for
-    // ContextCleaner (a driver GC side effect) leaves every vocab
-    // snapshot pinned in the storage region for the life of the
-    // session, starving whatever runs next on a shared session
-    var lastCkpt = words
+      .select(split(col("__w"), "").as("__sym"), col("__freq")))
     val merges = scala.collection.mutable.ArrayBuffer.empty[BpeMerge]
     var j = 0
     var sinceCkpt = 0
@@ -1344,15 +1339,13 @@ object TextOps {
         j += batch.length
         sinceCkpt += batch.length
         if (sinceCkpt >= 3) {
-          words = words.localCheckpoint() // eager: reads the old blocks
-          Dedup.CheckpointHygiene.free(lastCkpt)
-          lastCkpt = words
+          words = state.advance(words)
           sinceCkpt = 0
         }
       }
     }
     // the merge table is driver-side state; no checkpoint outlives the call
-    Dedup.CheckpointHygiene.free(lastCkpt)
+    state.release()
     spark.createDataFrame(merges.toSeq)
   }
 
@@ -1899,7 +1892,7 @@ object TextOps {
     // materialize, then release bc — a persisted count table left in
     // the CacheManager outlives the call on a shared session (the
     // bpeTrain/unigramTrain hygiene rule; CorpusSpec asserts it)
-    val result = out.localCheckpoint()
+    val result = CheckpointHygiene.materialize(out)
     bc.unpersist()
     result
   }
@@ -2389,7 +2382,8 @@ object TextOps {
     val spark = df.sparkSession
     // the ONE corpus-sized pass; checkpointed so rounds fold over the
     // materialized vocab table (the bpeTrain lesson)
-    var words = df
+    val state = new CheckpointHygiene.Rolling()
+    var words = state.advance(df
       .select(explode(tokens(lower(col(textCol)))).as("__w"))
       .filter(col("__w") =!= "")
       .groupBy(col("__w")).agg(count(lit(1)).as("__freq"))
@@ -2400,9 +2394,7 @@ object TextOps {
             slice(split(col("__w"), ""), lit(2),
               greatest(length(col("__w")) - 1, lit(0))),
             c => concat(lit("##"), c))).as("__sym"),
-        col("__freq"))
-      .localCheckpoint()
-    var lastCkpt = words
+        col("__freq")))
     val merges = scala.collection.mutable.ArrayBuffer.empty[WpMerge]
     var j = 0
     var sinceCkpt = 0
@@ -2444,14 +2436,12 @@ object TextOps {
         j += 1
         sinceCkpt += 1
         if (sinceCkpt >= 3) {
-          words = words.localCheckpoint()
-          Dedup.CheckpointHygiene.free(lastCkpt)
-          lastCkpt = words
+          words = state.advance(words)
           sinceCkpt = 0
         }
       }
     }
-    Dedup.CheckpointHygiene.free(lastCkpt)
+    state.release()
     spark.createDataFrame(merges.toSeq)
   }
 

@@ -683,11 +683,10 @@ object Corpus {
         .groupBy(col(idCol))
         .agg(sum(col("__c")).as("n_tokens"),
           sum(col("__c") * col("__r")).as("score"))
-      val out = scored
+      // materialize before the ratio table unpersists
+      graft.operators.CheckpointHygiene.materialize(scored
         .orderBy(col("score").desc, col(idCol).asc)
-        .limit(k)
-        .localCheckpoint() // materialize before the ratio table unpersists
-      out
+        .limit(k))
     } finally {
       counts.unpersist()
     }

@@ -5,6 +5,8 @@ import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.operators.CheckpointHygiene.{free, materialize}
+
 /** Partitioned-table maintenance: the small-files half of a 100 TB
   * lakehouse. Streaming ingest, per-partition appends (the
   * [[graft.operators.AnnIndex.appendIvfPq]] shape), and skewed
@@ -116,10 +118,9 @@ object Maintenance {
     val removeKeys = changes.select(keyCols.map(col): _*).distinct()
     val upserts = changes.filter(col("op").isin("insert", "update"))
       .select(current.columns.map(col).toIndexedSeq: _*)
-    val next = current.join(removeKeys, keyCols, "left_anti")
-      .unionByName(upserts)
-      // same read-what-you-overwrite materialization as compaction
-      .localCheckpoint()
+    // same read-what-you-overwrite materialization as compaction
+    val next = materialize(current.join(removeKeys, keyCols, "left_anti")
+      .unionByName(upserts))
     try {
       next.write.mode(SaveMode.Overwrite).partitionBy(partitionCol).parquet(path)
       // dynamic overwrite only rewrites partitions PRESENT in `next`; a
@@ -140,7 +141,7 @@ object Maintenance {
           fs.delete(new Path(root, s"$partitionCol=$dirName"), true)
         }
       }
-    } finally graft.operators.Dedup.CheckpointHygiene.free(next)
+    } finally free(next)
   }
 
   /** Compact every partition whose file count exceeds what
@@ -184,24 +185,23 @@ object Maintenance {
       // task writes whole output files — no tiny residues
       val saltSrc =
         if (dataCols.isEmpty) lit(0) else hash(struct(dataCols.map(col).toIndexedSeq: _*))
-      val arranged = df
+      // materialize BEFORE the overwrite: Spark (rightly) refuses a
+      // plan that reads the path it is overwriting; the checkpoint
+      // cuts that lineage and bounds what must be held to the victim
+      // partitions only — compact in partition batches when victims
+      // exceed cluster storage
+      val arranged = materialize(df
         .join(broadcast(targets), df(partitionCol).cast("string") ===
           targets(partitionCol).cast("string"))
         .drop(targets(partitionCol))
         .withColumn("__salt", pmod(saltSrc, col("__tf")))
         .repartition(math.max(1, victims.map(_._4).sum.toInt),
           col(partitionCol), col("__salt"))
-        .drop("__salt", "__tf")
-        // materialize BEFORE the overwrite: Spark (rightly) refuses a
-        // plan that reads the path it is overwriting; the checkpoint
-        // cuts that lineage and bounds what must be held to the victim
-        // partitions only — compact in partition batches when victims
-        // exceed cluster storage
-        .localCheckpoint()
+        .drop("__salt", "__tf"))
       try
         arranged.write.mode(SaveMode.Overwrite)
           .partitionBy(partitionCol).parquet(path)
-      finally graft.operators.Dedup.CheckpointHygiene.free(arranged)
+      finally free(arranged)
     }
     stats.toSeq.toDF("partition", "n_files", "bytes", "target_files", "compacted")
   }
@@ -303,7 +303,7 @@ object Maintenance {
           col("n_runs"),
           expr("(1000 * n_runs) div n_rows").as("runs_milli"),
           expr("(1000 * n_distinct) div n_rows").as("distinct_milli"))
-      out.localCheckpoint()
+      materialize(out)
     } finally joined.unpersist()
   }
 

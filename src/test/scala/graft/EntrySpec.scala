@@ -13,21 +13,45 @@ class EntrySpec extends AnyFunSuite with SparkTestBase {
     assert(missing.isEmpty, s"oracleSql without queries: $missing")
   }
 
-  test("all queries run at sf0.001 and rows-only queries are non-empty") {
+  /** Offenders of the three whole-registry checks, collected in ONE
+    * pass that builds each query once: its row count (rows-only
+    * queries must be non-empty), its column names and its final
+    * types all read the same DataFrame. */
+  private lazy val registryPass: (Seq[String], Seq[String], Seq[String]) = {
     val rowsOnly = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
-    SparkEntry.queries.foreach { case (name, fn) =>
-      val n = fn(spark, sf).count()
-      if (rowsOnly.contains(name)) assert(n > 0, s"$name returned 0 rows")
+    val empty, unaliased, fragileTypes = scala.collection.mutable.ListBuffer[String]()
+    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+      val df = fn(spark, sf)
+      val n = df.count()
+      if (rowsOnly.contains(name)) { if (n == 0) empty += name }
+      else {
+        df.columns.filter(_.contains("(")).foreach { c =>
+          unaliased += s"$name has un-aliased column '$c'"
+        }
+        val fragile = df.schema.fields.collect {
+          case f if f.dataType == org.apache.spark.sql.types.DoubleType ||
+            f.dataType == org.apache.spark.sql.types.FloatType =>
+            s"${f.name}:${f.dataType.simpleString}"
+          case f@org.apache.spark.sql.types.StructField(_,
+              d: org.apache.spark.sql.types.DecimalType, _, _)
+            if d.precision > 18 =>
+            s"${f.name}:${f.dataType.simpleString}"
+        }
+        if (fragile.nonEmpty && !SparkEntry.gateTypeWhitelist.contains(name))
+          fragileTypes += s"$name(${fragile.mkString(",")})"
+      }
     }
+    (empty.toSeq, unaliased.toSeq, fragileTypes.toSeq)
+  }
+
+  test("all queries run at sf0.001 and rows-only queries are non-empty") {
+    val (empty, _, _) = registryPass
+    assert(empty.isEmpty, s"${empty.mkString(", ")} returned 0 rows")
   }
 
   test("oracle-checked queries have stable column names (no auto-generated aliases)") {
-    SparkEntry.oracleSql.keys.foreach { name =>
-      val cols = SparkEntry.queries(name)(spark, sf).columns
-      cols.foreach { c =>
-        assert(!c.contains("("), s"$name has un-aliased column '$c'")
-      }
-    }
+    val (_, unaliased, _) = registryPass
+    assert(unaliased.isEmpty, unaliased.mkString("\n"))
   }
 
   // Gate-type policy (r13 verdict item 2, made structural): three
@@ -42,21 +66,7 @@ class EntrySpec extends AnyFunSuite with SparkTestBase {
   // policy runs python-side in tools/compare_oracle.py (kept in sync
   // by name).
   test("gate-type policy: no unadjudicated double/float/wide-decimal finals") {
-    val offenders = scala.collection.mutable.ListBuffer[String]()
-    SparkEntry.oracleSql.keys.toSeq.sorted.foreach { name =>
-      val fragile = SparkEntry.queries(name)(spark, sf).schema.fields
-        .collect {
-          case f if f.dataType == org.apache.spark.sql.types.DoubleType ||
-            f.dataType == org.apache.spark.sql.types.FloatType =>
-            s"${f.name}:${f.dataType.simpleString}"
-          case f@org.apache.spark.sql.types.StructField(_,
-              d: org.apache.spark.sql.types.DecimalType, _, _)
-            if d.precision > 18 =>
-            s"${f.name}:${f.dataType.simpleString}"
-        }
-      if (fragile.nonEmpty && !SparkEntry.gateTypeWhitelist.contains(name))
-        offenders += s"$name(${fragile.mkString(",")})"
-    }
+    val (_, _, offenders) = registryPass
     assert(offenders.isEmpty,
       s"""Oracle-checked queries with driver-fragile final types, not on
          |SparkEntry.gateTypeWhitelist. Either gate on integer/string

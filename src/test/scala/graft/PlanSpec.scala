@@ -723,6 +723,64 @@ class PlanSpec extends AnyFunSuite with SparkTestBase {
     assert(j(4) - j(2) == 7, s"longestPathDag per-pair job census moved: $j")
   }
 
+  test("Dedup.connectedComponents census: each extra round costs no more jobs than before the CheckpointHygiene port") {
+    import org.apache.spark.sql.functions._
+    // a path of length L settles in L rounds, and one more round finds
+    // no label changed: L = 2, 4 run 3, 5 rounds
+    def jobs(length: Int): Int = {
+      val pairs = spark.range(length)
+        .select(col("id").as("a"), (col("id") + 1).as("b"))
+      jobCensus(operators.Dedup.connectedComponents(pairs, "a", "b")
+        .collect(): Unit)._1
+    }
+    val (j2, j4) = (jobs(2), jobs(4))
+    // measured before the port (a lazy checkpoint per round, then a
+    // separate count of the changed flags): 19 -> 32, 13 jobs for the
+    // two extra rounds; with the flag count observed in each round's
+    // materialization, 19 -> 30
+    assert(j4 - j2 <= 13, s"connectedComponents per-round job census grew: $j2 -> $j4")
+  }
+
+  test("bradleyTerry census: each extra round costs no more jobs than before the CheckpointHygiene port") {
+    val games = spark.createDataFrame(Seq((0L, 1L), (0L, 2L), (1L, 2L),
+      (2L, 1L), (0L, 1L))).toDF("w", "l")
+    def jobs(rounds: Int): Int = jobCensus(operators.Learn.bradleyTerry(
+      games, "w", "l", rounds).collect(): Unit)._1
+    val (j2, j4) = (jobs(2), jobs(4))
+    // measured before the port: 27 -> 43, 16 jobs for the two extra
+    // rounds; with the item count observed in the first
+    // materialization, 22 -> 38
+    assert(j4 - j2 <= 16, s"bradleyTerry per-round job census grew: $j2 -> $j4")
+  }
+
+  test("source lint: only CheckpointHygiene checkpoints a DataFrame or reads the checkpoint dir") {
+    // each allowed site by file, with why it is not a frame materialization
+    val allow = Map(
+      "graft/operators/Graph.scala" ->
+        "bfsLevels checkpoints an RDD of per-partition BFS state objects, not a DataFrame")
+    val root = new java.io.File("src/main/scala")
+    assert(root.isDirectory, s"run from the repository root: ${root.getAbsolutePath}")
+    val call = """localCheckpoint\(|\.checkpoint\(|getCheckpointDir""".r
+    def files(d: java.io.File): Seq[java.io.File] = d.listFiles.toSeq.flatMap(f =>
+      if (f.isDirectory) files(f) else if (f.getName.endsWith(".scala")) Seq(f) else Nil)
+    val hits = for {
+      f <- files(root)
+      rel = root.toPath.relativize(f.toPath).toString
+      if rel != "graft/operators/CheckpointHygiene.scala"
+      (line, i) <- scala.io.Source.fromFile(f, "UTF-8").getLines().toSeq.zipWithIndex
+      code = line.replaceAll("//.*$", "")
+      if !code.trim.startsWith("*") && call.findFirstIn(code).isDefined
+    } yield (rel, s"$rel:${i + 1}: ${line.trim}")
+    val byFile = hits.groupBy(_._1)
+    val offenders = byFile.toSeq.flatMap { case (rel, hs) =>
+      if (allow.contains(rel) && hs.size == 1) Nil else hs.map(_._2) }
+    assert(offenders.isEmpty,
+      s"checkpoint outside CheckpointHygiene (route it through materialize/Rolling):\n" +
+        offenders.sorted.mkString("\n"))
+    val stale = allow.keySet -- byFile.keySet
+    assert(stale.isEmpty, s"allowlisted but no longer checkpointing: $stale")
+  }
+
   test("readSnapshot of a schema-carrying snapshot runs no job") {
     val path = java.nio.file.Files.createTempDirectory("graft_plan_snap_").toString
     graft.sources.Snapshots.commit(spark.range(0, 10).toDF(), path)

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkTestBase
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** [[Graph.pageRankInt]]: hand-replayed integer power iteration,
@@ -938,11 +939,48 @@ class GraphSpec extends SparkTestBase {
     }
   }
 
+  /** The iterative kernels, each on a fixture that rolls its state
+    * past at least one periodic checkpoint, by name. */
+  private def iterativeKernels: Seq[(String, () => DataFrame)] = {
+    val chain = (0L until 6L).map(i => (i, i + 1, i + 1)).toDF("s", "t", "w")
+    val seeds = Seq(0L).toDF("n")
+    val cycles = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 5L),
+      (5L, 4L), (5L, 6L)).toDF("s", "t")
+    val pts = Seq.tabulate(12)(i =>
+      (i.toLong, Seq((i % 3) * 2.0f + i * 0.01f, (i % 2).toFloat)))
+      .toDF("vec_id", "embedding")
+    val text = Seq("hug hug pug bug hugs pugs bugs hugging").toDF("text")
+    val games = Seq((0L, 1L), (0L, 2L), (1L, 2L), (2L, 1L)).toDF("w", "l")
+    val track = Seq.tabulate(40)(i =>
+      (1L, i.toLong, i.toLong, (i * i * 7 % 23).toLong)).toDF("k", "o", "x", "y")
+    Seq(
+      "earliestArrival" -> (() => Graph.earliestArrival(chain, "s", "t", "w",
+        seeds, "n", seedTs = 0L, rounds = 6)),
+      "ssspBellmanFord" -> (() => Graph.ssspBellmanFord(chain, "s", "t", "w",
+        seeds, "n", rounds = 6)),
+      "longestPathDag" -> (() => Graph.longestPathDag(chain, "s", "t", "w")),
+      "stronglyConnectedComponents" -> (() => Graph.stronglyConnectedComponents(
+        cycles, "s", "t", driverCap = 0)),
+      "kmeansInt" -> (() => Similarity.kmeansInt(pts, "vec_id", "embedding",
+        pts.filter(col("vec_id") < 3), "vec_id", "embedding", rounds = 3)),
+      "topEigenInt" -> (() => Similarity.topEigenInt(pts, "vec_id",
+        "embedding", rounds = 3)),
+      "bpeTrain" -> (() => TextOps.bpeTrain(text, "text", numMerges = 8,
+        minPairCount = 1L, batchMerges = 1)),
+      "wordPieceTrain" -> (() => TextOps.wordPieceTrain(text, "text",
+        numMerges = 6)),
+      "bradleyTerry" -> (() => Learn.bradleyTerry(games, "w", "l", rounds = 3)),
+      "Dedup.connectedComponents" -> (() =>
+        Dedup.connectedComponents(chain, "s", "t")),
+      "douglasPeucker" -> (() => Layout.douglasPeucker(track, "k", Seq("o"),
+        "x", "y", eps = 0L)))
+  }
+
   test("checkpoint hygiene: the iterative kernels leave only their result's own blocks pinned") {
     import org.apache.spark.rdd.RDD
     val sc = spark.sparkContext
     // every RDD the frame's plan reads, down its whole lineage
-    def lineage(df: org.apache.spark.sql.DataFrame): Set[Int] = {
+    def lineage(df: DataFrame): Set[Int] = {
       def walk(r: RDD[_]): Set[Int] =
         r.dependencies.map(d => walk(d.rdd)).foldLeft(Set(r.id))(_ ++ _)
       df.queryExecution.analyzed.collect {
@@ -950,24 +988,37 @@ class GraphSpec extends SparkTestBase {
       }.flatten.toSet
     }
     // measured right after the call: a driver GC can only hide a leak
-    def check(name: String)(call: => org.apache.spark.sql.DataFrame): Unit = {
+    iterativeKernels.foreach { case (name, call) =>
       val before = sc.getPersistentRDDs.keySet
-      val out = call
+      val out = call()
       val pinned = sc.getPersistentRDDs.keySet -- before
       assert(pinned.size <= 1 && pinned.subsetOf(lineage(out)),
         s"$name left ${pinned.size} pinned RDDs beyond its result's own: $pinned")
       assert(out.collect().nonEmpty, s"$name result no longer reads")
     }
-    val chain = (0L until 6L).map(i => (i, i + 1, i + 1)).toDF("s", "t", "w")
-    val seeds = Seq(0L).toDF("n")
-    check("earliestArrival")(Graph.earliestArrival(chain, "s", "t", "w",
-      seeds, "n", seedTs = 0L, rounds = 6))
-    check("ssspBellmanFord")(Graph.ssspBellmanFord(chain, "s", "t", "w",
-      seeds, "n", rounds = 6))
-    check("longestPathDag")(Graph.longestPathDag(chain, "s", "t", "w"))
-    val cycles = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 5L),
-      (5L, 4L), (5L, 6L)).toDF("s", "t")
-    check("stronglyConnectedComponents")(Graph.stronglyConnectedComponents(
-      cycles, "s", "t", driverCap = 0))
+  }
+
+  test("reliable checkpoints: with a checkpoint dir the iterative kernels write checkpoint files and return the same rows") {
+    def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
+    def partFiles(dir: java.io.File): Long = {
+      val walk = java.nio.file.Files.walk(dir.toPath)
+      try walk.filter(_.getFileName.toString.startsWith("part-")).count()
+      finally walk.close()
+    }
+    // a permutation of 0..49 over three input partitions, so the row
+    // numbers cross range-partition boundaries
+    val rowNumbers = "globalRowNumber" -> (() => Relational.globalRowNumber(
+      spark.range(0, 50, 1, 3).select((col("id") * 7 % 50).as("k")),
+      Seq(col("k"))))
+    (iterativeKernels :+ rowNumbers).foreach { case (name, call) =>
+      val local = rows(call())
+      val dir = java.nio.file.Files.createTempDirectory("graft_ckpt_").toFile
+      val reliable = org.apache.spark.CheckpointDirAccess.withCheckpointDir(
+        spark.sparkContext, dir.getPath)(rows(call()))
+      assert(spark.sparkContext.getCheckpointDir.isEmpty,
+        "the checkpoint dir outlived the block")
+      assert(reliable == local, s"$name: reliable checkpoints changed the rows")
+      assert(partFiles(dir) > 0, s"$name wrote no checkpoint files under $dir")
+    }
   }
 }
